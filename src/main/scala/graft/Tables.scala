@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   *  - Timestamp columns are cast to TimestampType so behavior is identical
   *    whether the reader infers TIMESTAMP_NTZ (Spark ≥3.4 default for
   *    isAdjustedToUTC=false parquet) or not; the session timezone is pinned
-  *    UTC (build.sbt, Verify.scala) which makes the NTZ→LTZ cast
-  *    value-preserving.
+  *    UTC (graft.Session, build.sbt, and `ensure` below) which makes the
+  *    NTZ→LTZ cast value-preserving.
   *
   * At 100 TB these loaders would take partitioned table roots instead of
   * single files; everything downstream is partition-agnostic (no
@@ -41,7 +41,7 @@ object Tables {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // catalog confs are runtime-settable (unlike spark.sql.extensions, a
-    // build-time static conf the harness mains set in their builders):
+    // build-time static conf graft.Session sets in its builder):
     // `SELECT … FROM txtable.`/root`` works on any session that ran ensure
     spark.conf.set("spark.sql.catalog.txtable", "graft.sources.TxTableCatalog")
     graft.functions.FloatDot.register(spark)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,28 +9,9 @@ object Verify {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE may right-size cached plans (physical only; Bench runs the
-      // same conf — round-10 A/B: suite total −10% at equal cheap-tail)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf (must ride the builder): the txtable SQL DML/DDL
-      // parser — functions/rules are ALSO registered per-session by
-      // Tables.ensure, which cannot inject a parser
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
+    val selected = SparkEntry.selectedQueries
     new java.io.File(outDir).mkdirs()
-    // dev escape hatch, mirroring Bench: SPARK_GRAFT_ONLY=q_a,q_b dumps a
-    // subset for a targeted dev/compare.py pass; the driver never sets it
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    val selected = SparkEntry.queries.filter { case (k, _) => only.forall(_.contains(k)) }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

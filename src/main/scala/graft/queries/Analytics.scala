@@ -19,7 +19,7 @@ import Q._
   * bit-identical doubles), ratios leave as floor(10000·x) basis points,
   * and every query ends in a total ORDER BY.
   */
-object Analytics {
+object Analytics extends QueryModule {
 
   /** Exact distinct users per event type via mergeable bitmap sketches —
     * the 100 TB pattern for exact COUNT(DISTINCT): per (group, bucket)

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * data-sized single partition), and every quantile an ORDER STATISTIC
   * over quantized integers computed from a cumulative HISTOGRAM — the
   * shape that stays exact AND distributed when the row count is 10¹². */
-object Analytics10 {
+object Analytics10 extends QueryModule {
 
   private def cents(c: Column): Column =
     floor(c * 100.0 + 0.5).cast("long")

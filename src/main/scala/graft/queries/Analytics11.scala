@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * statistic over a domain-bounded cumulative histogram, and rank
   * state always node-bounded while the edge/event side stays
   * distributed. */
-object Analytics11 {
+object Analytics11 extends QueryModule {
 
   /** K-ANONYMITY / L-DIVERSITY AUDIT — before a corpus ships, which
     * quasi-identifier classes are re-identifiable: group documents by

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * exact integers, windows only over keys or bounded domains, and
   * every rollup reading the PREVIOUS reduction, never the raw stream
   * twice. */
-object Analytics12 {
+object Analytics12 extends QueryModule {
 
   private def cents(c: Column): Column =
     floor(c * 100.0 + 0.5).cast("long")

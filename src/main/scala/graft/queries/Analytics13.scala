@@ -10,7 +10,7 @@ import graft.Tables
   * alternative, linear-model quality-classifier inference, epoch-based
   * corpus upsampling, and keep-best dedup — each an LLM-pipeline shape
   * the existing tiers compose around, each DuckDB-oracle-checked. */
-object Analytics13 {
+object Analytics13 extends QueryModule {
 
   /** DEDUP CLUSTERING VIA STAR CONTRACTION — the same near-dup graph as
     * [[LlmExt.q_dedup_cluster]] (exact ≥0.8-Jaccard pairs on the dense

@@ -9,7 +9,7 @@ import graft.Tables
   * code-switch detection — two LLM-pipeline readouts the existing eval
   * (confusion matrix) and language tiers (lang-id, language mix) did not
   * cover, each DuckDB-oracle-checked with all-integer arithmetic. */
-object Analytics14 {
+object Analytics14 extends QueryModule {
 
   /** CALIBRATION TABLE (reliability diagram) — the evaluation readout
     * beside q_eval_confusion: bucket a model's predicted probability

@@ -13,7 +13,7 @@ import graft.Tables
   * window pass), and cross-source vocabulary overlap (the
   * source-redundancy readout behind mixture decisions). All-integer
   * arithmetic; each DuckDB-oracle-checked. */
-object Analytics15 {
+object Analytics15 extends QueryModule {
 
   /** INCREMENTAL EXACT DEDUP — the per-snapshot shape production
     * pipelines actually run (a full-corpus re-dedup per crawl is the

@@ -17,7 +17,7 @@ import Q._
   * IDENTICAL operation order on both engines, ratios quantized with
   * floor(10000·x), every query ending in a total ORDER BY.
   */
-object Analytics2 {
+object Analytics2 extends QueryModule {
 
   /** Market-basket co-occurrence over (user, day) baskets: which event
     * types happen together in a user's day, with exact support and lift.

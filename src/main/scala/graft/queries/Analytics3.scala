@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * everywhere the driver hashes, explicit total ORDER BY, INT/BIGINT
   * output types pinned on both engines.
   */
-object Analytics3 {
+object Analytics3 extends QueryModule {
 
   /** Sequence-pattern matching over per-user event streams — the
     * MATCH_RECOGNIZE tier: encode each user's (ts, event_id)-ordered

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * Determinism follows SURVEY.md §2.10 / [[Q]]: integer arithmetic in every
   * hashed column, explicit total ORDER BY, types pinned on both engines.
   */
-object Analytics4 {
+object Analytics4 extends QueryModule {
 
   /** Per-key sorted-merge pair counting via typed cogroup — the
     * `KeyValueGroupedDataset.cogroup` tier of §2's preference order,

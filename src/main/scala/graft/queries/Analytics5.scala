@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * values in every hashed column, explicit total ORDER BY, types pinned on
   * both engines.
   */
-object Analytics5 {
+object Analytics5 extends QueryModule {
 
   /** Declared-constraint audit (the Deequ/Great-Expectations tier next to
     * q_profile_stats's column profiling — that one DESCRIBES columns, this

@@ -10,7 +10,7 @@ import graft.Tables
   * (the CCNet perplexity-filter tier), the point-in-time join against a
   * versioned dimension (feature-store correctness), and recency-decayed
   * aggregation in exact dyadic arithmetic. */
-object Analytics6 {
+object Analytics6 extends QueryModule {
 
   /** Bigram-LM predictability scoring — the perplexity-style quality
     * filter every pretraining pipeline runs (CCNet's KenLM tier), with

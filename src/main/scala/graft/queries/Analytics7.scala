@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * parsing (the netmonitor ingest face), the frame-sampling multimodal
   * gate, bottom-k uniform sampling, the Count-Min point-frequency
   * sketch, and the native as-of join's direction/tolerance variants. */
-object Analytics7 {
+object Analytics7 extends QueryModule {
 
   /** Structured LOG-LINE PARSING — the ingest stage every monitoring
     * pipeline runs first: raw text lines → typed columns, with a

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * (basis-point / e4 flooring, integer cross-multiply flags), the
   * q_trend_ols / q_ab_welch discipline: ship integer partials, divide
   * once at the end, never let a float accumulate in partition order. */
-object Analytics8 {
+object Analytics8 extends QueryModule {
 
   /** GINI CONCENTRATION INDEX per segment — "is this event class driven
     * by a few heavy hosts?": per (event_type, user_id) traffic totals in

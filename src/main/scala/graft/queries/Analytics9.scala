@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * at the end, integer cross-multiply flags), fixed unrolled rounds for
   * anything iterative so the computation is deterministic and earns a
   * real SQL oracle, and windows only over key-bounded frames. */
-object Analytics9 {
+object Analytics9 extends QueryModule {
 
   /** URL CANONICALIZATION + CANONICAL DEDUP — the first operator of every
     * web-crawl pipeline: raw URLs differ in scheme/host case, default

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * DuckDB lambda indexes are 1-based where Spark's are 0-based — the only
   * index-using pair here (fingerprint) avoids indexes entirely by folding.
   */
-object LlmExt {
+object LlmExt extends QueryModule {
 
   private val stopEn = "('the','and','of','a','to')"
 

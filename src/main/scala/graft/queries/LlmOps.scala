@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * validated bit-identical at 4 dp), and similarity thresholds are applied
   * to the *rounded* value on both sides.
   */
-object LlmOps {
+object LlmOps extends QueryModule {
 
   /** Exact-dup detection: per source, docs vs distinct md5(text). At 100 TB
     * the same plan holds with xxhash64 pre-shuffle (cheaper) + md5 confirm;

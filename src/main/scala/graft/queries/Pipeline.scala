@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * bucketing. All three ride the engine's deterministic md5 recipe
   * (cf. LlmExt.withSplit) so the oracle pins exact row-level decisions,
   * never a pseudo-random approximation. */
-object Pipeline {
+object Pipeline extends QueryModule {
 
   /** Seeded GLOBAL SHUFFLE of the corpus — the training-order
     * randomization pass (every epoch reshuffle is this op with a new

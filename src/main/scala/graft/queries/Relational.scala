@@ -14,7 +14,7 @@ import Q._
   * ORDER BY on a candidate key, decimal-cast before any SUM, explicit
   * result-type casts on both sides.
   */
-object Relational {
+object Relational extends QueryModule {
 
   // ---- §2.1 scan / projection ------------------------------------------
 

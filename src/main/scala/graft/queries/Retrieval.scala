@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * between two event populations, computed distributively over the
   * value-domain frame (never a global data window).
   */
-object Retrieval {
+object Retrieval extends QueryModule {
 
   /** Hybrid retrieval with reciprocal-rank fusion.
     *

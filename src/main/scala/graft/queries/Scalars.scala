@@ -14,7 +14,7 @@ import Q._
   * cast; int x/0 errors in DuckDB → NULLIF guards on both sides; libm-
   * dependent fns (ln/exp/pow) avoided — sqrt is IEEE-exact.
   */
-object Scalars {
+object Scalars extends QueryModule {
 
   /** String function battery over customer names/segments. */
   def q_str_funcs(spark: SparkSession, dir: String): DataFrame = {

@@ -19,7 +19,7 @@ import graft.Tables
   * Views are registered per call (session-scoped, idempotent
   * `createOrReplaceTempView`), so the surface composes with any sf dir
   * the driver passes. */
-object SqlSurface {
+object SqlSurface extends QueryModule {
 
   /** Register the TPC-H tables under their standard names. */
   private def views(spark: SparkSession, dir: String): Unit = {

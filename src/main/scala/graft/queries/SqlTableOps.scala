@@ -17,7 +17,7 @@ import graft.Tables
   * divergence between the two entry points lands on a hash mismatch.
   * The statements delegate to the spec-hardened TxTable operations; the
   * gates pin that the parse/resolution layer routes them faithfully. */
-object SqlTableOps {
+object SqlTableOps extends QueryModule {
 
   private def q(root: String): String = s"txtable.`$root`"
 

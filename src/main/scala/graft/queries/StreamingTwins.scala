@@ -17,7 +17,7 @@ import Q._
   * Window starts are emitted as epoch seconds / DATE, never raw timestamps,
   * so parquet logical types match DuckDB's output exactly.
   */
-object StreamingTwins {
+object StreamingTwins extends QueryModule {
 
   /** 1-day tumbling window per event_type (epoch-aligned both engines). */
   def q_stream_tumble(spark: SparkSession, dir: String): DataFrame = {

@@ -20,7 +20,7 @@ import graft.tables.TxTable
   * build. The merge query still gets a private file-tree COPY per call —
   * merge commits new versions, and calls must stay independent.
   */
-object TableOps {
+object TableOps extends QueryModule {
 
   /** Recursive file-tree copy (the base table is a few small parquet
     * files plus O(files) manifests — milliseconds, vs re-running the

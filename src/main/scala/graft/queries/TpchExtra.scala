@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * top-k join pipeline. Predicates adapt to the synthetic schema (no
   * commit/receipt dates: "late" = shipped > 30 days after order date)
   * with the plan shapes intact. */
-object TpchExtra {
+object TpchExtra extends QueryModule {
 
   /** TPC-H Q4 shape — order-priority checking: count orders in a
     * 1-year window having at least one late lineitem. The EXISTS

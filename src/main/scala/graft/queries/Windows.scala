@@ -13,7 +13,7 @@ import Q._
   * deltas are emitted as epoch-µs BIGINTs (`unix_micros` ↔ DuckDB
   * `epoch_us`) — exact integers on both engines, no truncation ambiguity.
   */
-object Windows {
+object Windows extends QueryModule {
 
   /** row_number / rank / dense_rank, top-5 per nation. */
   def q_win_rank(spark: SparkSession, dir: String): DataFrame = {

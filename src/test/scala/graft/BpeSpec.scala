@@ -146,36 +146,18 @@ class BpeSpec extends AnyFunSuite with SparkFixture {
     val corpus = Tables.documents(spark, "/root/testdata/sf0.01")
       .select("text").as[String].collect().toSeq
     val want = refBpe(corpus, 64)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
+    val (got, jobs) = JobMeter.measure(spark) {
+      val df = Analytics6.bpeTrain(spark,
+        Tables.documents(spark, "/root/testdata/sf0.01").select(col("text")), 64)
+      df.collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2),
+          r.getString(3), r.getLong(4))).toSeq
     }
-    spark.sparkContext.addSparkListener(listener)
-    val got =
-      try {
-        val df = Analytics6.bpeTrain(spark,
-          Tables.documents(spark, "/root/testdata/sf0.01").select(col("text")), 64)
-        val rows = df.collect()
-          .map(r => (r.getInt(0), r.getString(1), r.getString(2),
-            r.getString(3), r.getLong(4))).toSeq
-        // listener delivery is async: wait until the count stops moving
-        var last = -1
-        var stable = 0
-        while (stable < 3) {
-          Thread.sleep(200)
-          val cur = jobs.get()
-          if (cur == last) stable += 1 else { stable = 0; last = cur }
-        }
-        rows
-      } finally spark.sparkContext.removeSparkListener(listener)
     assert(got.size == 64 && got == want,
       s"k=64 train must equal the sequential reference\ngot:  ${got.take(5)}…")
     // the corpus-sized work is ONE word count; the 64-merge loop runs on
     // the Zipf-bounded dictionary — k/4 = 16 driver jobs is generous
-    assert(jobs.get() <= 16, s"k=64 must train under 16 driver jobs, ran ${jobs.get()}")
+    assert(jobs.size <= 16, s"k=64 must train under 16 driver jobs, ran ${jobs.size}")
   }
 
   test("distributed exact-batched rounds equal the reference (oversize-vocab path)") {

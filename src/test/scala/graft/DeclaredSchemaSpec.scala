@@ -36,27 +36,15 @@ class DeclaredSchemaSpec extends AnyFunSuite with SparkFixture {
     val t = new TxTable(Files.createTempDirectory("graft_decl2").toString, Seq("user_id"))
     t.append(spark, rows(0, 50).repartition(4))
     t.read(spark).count() // settle the session's first-use jobs
-    val names = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[String]())
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        j.stageInfos.foreach(s => names.add(s.name)); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val n = t.read(spark).count()
-      Thread.sleep(500) // let the listener bus drain
-      assert(n == 50)
-      // a mergeSchema read schedules a footer-merge job whose call site
-      // is the `.parquet(...)` line inside TxTable — the declared read
-      // must go straight to the count job(s)
-      val snap = names.toArray(Array.empty[String]).toSeq
-      assert(snap.nonEmpty, "listener saw no jobs")
-      assert(!snap.exists(_.startsWith("parquet at Tx")),
-        s"declared read must plan from the manifest schema, saw: $snap")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (n, jobs) = JobMeter.measure(spark)(t.read(spark).count())
+    assert(n == 50)
+    // a mergeSchema read schedules a footer-merge job whose call site
+    // is the `.parquet(...)` line inside TxTable — the declared read
+    // must go straight to the count job(s)
+    val snap = jobs.flatMap(_.stages)
+    assert(snap.nonEmpty, "listener saw no jobs")
+    assert(!snap.exists(_.startsWith("parquet at Tx")),
+      s"declared read must plan from the manifest schema, saw: $snap")
   }
 
   test("append-to-append evolution: new column NULL-backfills, conflict refuses") {

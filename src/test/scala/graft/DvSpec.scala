@@ -197,21 +197,11 @@ class DvSpec extends AnyFunSuite with SparkFixture {
   test("the vector write fans out one task per candidate file — never a funnel") {
     val t = freshTable()
     t.append(spark, keyed(0, 100, 10))
-    val stages = scala.collection.mutable.Set[Int]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stages += s.stageInfo.numTasks; ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      // a perpendicular predicate: every one of the 10 files straddles
-      t.deletePositionalWhere(spark, "k % 10 = 3")
-      Thread.sleep(500) // listener bus drain
-      assert(stages.contains(10),
-        s"the dv write must run one task per candidate file (10), saw stages $stages")
-    } finally spark.sparkContext.removeSparkListener(l)
+    // a perpendicular predicate: every one of the 10 files straddles
+    val (_, jobs) = JobMeter.measure(spark)(t.deletePositionalWhere(spark, "k % 10 = 3"))
+    val stages = jobs.flatMap(_.tasks).toSet
+    assert(stages.contains(10),
+      s"the dv write must run one task per candidate file (10), saw stages $stages")
     assert(t.snapshot().files.flatMap(_.dv).distinct.size == 10)
     assert(keysOf(t) == (0L until 100L).filterNot(_ % 10 == 3))
   }

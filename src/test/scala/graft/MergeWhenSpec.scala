@@ -434,24 +434,10 @@ class MergeWhenSpec extends AnyFunSuite with SparkFixture {
       val srcRows = (1 to 6).map(_ =>
         (rnd.nextLong(60L), rnd.nextLong(25L), rnd.nextLong(4L)))
       val src = srcRows.toDF("k", "v", "s")
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val got =
-        try t.multiKeyHitPaths(spark, base, src, Seq("k", "v", "s")).get
-        finally {
-          // listener delivery is async: wait until the count stops moving
-          var last = -1
-          while (jobs.get != last) { last = jobs.get; Thread.sleep(50) }
-          spark.sparkContext.removeSparkListener(listener)
-        }
-      assert(jobs.get == 1,
-        s"trial $trial: 3-component probe must run ONE job, ran ${jobs.get}")
+      val (got, jobs) = JobMeter.measure(spark)(
+        t.multiKeyHitPaths(spark, base, src, Seq("k", "v", "s")).get)
+      assert(jobs.size == 1,
+        s"trial $trial: 3-component probe must run ONE job, ran ${jobs.size}")
       // reference: intersection of per-component interval hits (files
       // statless on a component count as hits there)
       val want = Seq("k", "v", "s").map { c =>

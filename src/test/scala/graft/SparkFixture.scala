@@ -3,23 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.Suite
 
-/** Shared local session for specs (one JVM for the forked test run).
-  * UTC-pinned like the harness (FIXTURES.md: assertions drift otherwise). */
+/** Shared local session for specs (one JVM for the forked test run),
+  * built by the same factory as Bench and Verify — UTC-pinned like the
+  * harness (FIXTURES.md: assertions drift otherwise). */
 trait SparkFixture { this: Suite =>
   lazy val spark: SparkSession = SparkFixture.session
   def sf: String = "/root/testdata/sf0.001"
 }
 
 object SparkFixture {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Session.local(4)
 }

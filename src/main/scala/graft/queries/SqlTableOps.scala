@@ -424,10 +424,11 @@ object SqlTableOps extends QueryModule {
 
   /** SQL UPDATE — Delta's third DML statement beside DELETE and MERGE:
     * `UPDATE … SET value = value * 2 WHERE user_id BETWEEN 3 AND 7`,
-    * executed as the band rewrite (readWhere + Catalyst SET expressions +
-    * overwriteWhere) so only band-touching files are rewritten. Earns
-    * q_table_replace's oracle: the same restatement computed by DuckDB
-    * set logic. */
+    * executed by [[graft.tables.TxTable.updateWhere]] (the BETWEEN
+    * prunes files like any other WHERE; one conditional projection
+    * applies the Catalyst SET expressions) so only band-touching files
+    * are rewritten. Earns q_table_replace's oracle: the same restatement
+    * computed by DuckDB set logic. */
   def q_sql_table_update(spark: SparkSession, dir: String): DataFrame = {
     Tables.ensure(spark)
     val published = TableOps.eventsTableRoot(spark, dir)

@@ -315,9 +315,10 @@ class TxSqlTable(val root: String, versionAsOf: Option[Int],
   // ---- DELETE FROM … WHERE (filter-based, Delta-style) -----------------
   // Supported shapes: conjuncts over ONE column — `c = v`, `c >= lo`,
   // `c <= hi`, `c > / < v`, BETWEEN (arrives as >= + <=). The table
-  // layer's delete(statCol, lo, hi) does the rest (manifest prune, full
-  // drops, band rewrites). Anything else is refused via canDeleteWhere —
-  // a loud AnalysisException, never a partial delete.
+  // layer's delete(statCol, lo, hi) — deleteWhere on the band — does the
+  // rest (manifest prune, metadata-only drops, straddler rewrites).
+  // Anything else is refused via canDeleteWhere — a loud
+  // AnalysisException, never a partial delete.
   private def asBand(filters: Array[Filter]): Option[(String, Long, Long)] = {
     def longOf(v: Any): Option[Long] = v match {
       case l: Long => Some(l)

@@ -111,25 +111,28 @@ object GraftSqlParser {
     "(?s)^\\s*(?:(\\w+)\\s*\\.\\s*)?(\\w+)\\s*=\\s*(?:(\\w+)\\s*\\.\\s*)?(\\w+)\\s*$".r
 
   // `UPDATE t SET … WHERE c [NOT] IN (SELECT …)` — the update face of
-  // the subquery-predicate DML; matched before the band/general forms
+  // the subquery-predicate DML; matched before the general form
   private val UpdateInSubqRe = (
     "(?is)^\\s*UPDATE\\s+" + Target +
     "\\s+SET\\s+(.+?)" +
     "\\s+WHERE\\s+(\\w+)\\s+(NOT\\s+)?IN\\s*\\(\\s*(SELECT\\b.+)\\)\\s*;?\\s*$").r
 
-  private val UpdateRe = (
-    "(?is)^\\s*UPDATE\\s+" + Target +
-    "\\s+SET\\s+(.+?)" +
-    "\\s+WHERE\\s+(\\w+)\\s+BETWEEN\\s+(-?\\d+)\\s+AND\\s+(-?\\d+)\\s*;?\\s*$").r
-  // the GENERAL form — any predicate text; tried after the banded form,
-  // which keeps the replaceWhere-proved band fast path for band-shaped
-  // statements and routes everything else to TxTable.updateWhere
+  // every other WHERE — any predicate text, BETWEEN bands included —
+  // runs TxTable.updateWhere, which prunes files from the predicate
   private val UpdateWhereRe = (
     "(?is)^\\s*UPDATE\\s+" + Target +
     "\\s+SET\\s+(.+?)" +
     "\\s+WHERE\\s+(.+?)\\s*;?\\s*$").r
   private val UpdateProbe = ("(?is)^\\s*UPDATE\\s+" + Target + ".*").r
   private val Assign = "(?s)^\\s*(\\w+)\\s*=\\s*(.+?)\\s*$".r
+
+  /** `a = expr, b = expr` (top-level commas only) as (column, rhs) pairs. */
+  private def assignmentsOf(sets: String, verb: String): Seq[(String, String)] =
+    splitTopLevel(sets).map {
+      case Assign(name, rhs) => (name, rhs)
+      case other => throw new IllegalArgumentException(
+        s"bad $verb assignment: $other")
+    }
 
   // `DELETE FROM t WHERE c [NOT] IN (SELECT …)` — the subquery-predicate
   // DML form (round-12 verdict #2); matched BEFORE the general WHERE so
@@ -282,15 +285,13 @@ object GraftSqlParser {
     case ExplainDmlRe(inner) =>
       parseGraft(inner).map {
         case TxMergeCommand(root, sourceSql, keys) =>
-          TxDryRunCommand(root, "merge", Some(sourceSql), keys, None, None)
+          TxDryRunCommand(root, "merge", Some(sourceSql), keys, None)
         case TxMergeWhenCommand(root, sourceSql, keys, _, _, _) =>
-          TxDryRunCommand(root, "merge", Some(sourceSql), keys, None, None)
-        case TxUpdateCommand(root, _, c, lo, hi) =>
-          TxDryRunCommand(root, "update", None, Nil, Some((c, lo, hi)), None)
+          TxDryRunCommand(root, "merge", Some(sourceSql), keys, None)
         case TxUpdateWhereCommand(root, _, pred) =>
-          TxDryRunCommand(root, "update", None, Nil, None, Some(pred))
+          TxDryRunCommand(root, "update", None, Nil, Some(pred))
         case TxDeleteWhereCommand(root, pred) =>
-          TxDryRunCommand(root, "delete", None, Nil, None, Some(pred))
+          TxDryRunCommand(root, "delete", None, Nil, Some(pred))
         case other => throw new IllegalArgumentException(
           "EXPLAIN (dry run) supports MERGE INTO, UPDATE … WHERE, and " +
             s"DELETE FROM … WHERE on txtable targets; got ${other.getClass.getSimpleName}")
@@ -319,27 +320,10 @@ object GraftSqlParser {
           "INSERT (cols) VALUES (exprs), and/or " +
           "WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN UPDATE SET … | DELETE")))
     case UpdateInSubqRe(root, sets, column, not, sub) =>
-      val assignments = splitTopLevel(sets).map {
-        case Assign(name, rhs) => (name, rhs)
-        case other => throw new IllegalArgumentException(
-          s"bad UPDATE assignment: $other")
-      }
-      Some(TxUpdateSubqCommand(root, assignments, column, sub.trim,
-        negated = not != null))
-    case UpdateRe(root, sets, c, lo, hi) =>
-      val assignments = splitTopLevel(sets).map {
-        case Assign(name, rhs) => (name, rhs)
-        case other => throw new IllegalArgumentException(
-          s"bad UPDATE assignment: $other")
-      }
-      Some(TxUpdateCommand(root, assignments, c, lo.toLong, hi.toLong))
+      Some(TxUpdateSubqCommand(root, assignmentsOf(sets, "UPDATE"), column,
+        sub.trim, negated = not != null))
     case UpdateWhereRe(root, sets, pred) =>
-      val assignments = splitTopLevel(sets).map {
-        case Assign(name, rhs) => (name, rhs)
-        case other => throw new IllegalArgumentException(
-          s"bad UPDATE assignment: $other")
-      }
-      Some(TxUpdateWhereCommand(root, assignments, pred))
+      Some(TxUpdateWhereCommand(root, assignmentsOf(sets, "UPDATE"), pred))
     case UpdateProbe(root) => throw new IllegalArgumentException(
       s"unsupported UPDATE form for txtable.`$root` — supported: " +
         "UPDATE txtable.`root` SET col = <expr>[, …] WHERE <predicate>")
@@ -1147,12 +1131,8 @@ object GraftSqlParser {
           case BySourceDelRe(cond) =>
             bySource += MergeDelete(Option(cond).map(_.trim))
           case BySourceUpdRe(cond, sets) =>
-            val assignments = splitTopLevel(sets).map {
-              case Assign(name, rhs) => (name, rhs)
-              case other => throw new IllegalArgumentException(
-                s"bad MERGE UPDATE assignment: $other")
-            }
-            bySource += MergeUpdate(Option(cond).map(_.trim), Some(assignments))
+            bySource += MergeUpdate(Option(cond).map(_.trim),
+              Some(assignmentsOf(sets, "MERGE UPDATE")))
           case NotMatchedStarRe(cond) =>
             notMatched += MergeInsert(Option(cond).map(_.trim), None, None)
           case NotMatchedInsRe(cond, cols, vals) =>
@@ -1160,12 +1140,8 @@ object GraftSqlParser {
               Some(cols.split(",").map(_.trim).filter(_.nonEmpty).toSeq),
               Some(splitTopLevel(vals).map(_.trim)))
           case MatchedUpdRe(cond, sets) => // AFTER the star form (it matches `*` too)
-            val assignments = splitTopLevel(sets).map {
-              case Assign(name, rhs) => (name, rhs)
-              case other => throw new IllegalArgumentException(
-                s"bad MERGE UPDATE assignment: $other")
-            }
-            matched += MergeUpdate(Option(cond).map(_.trim), Some(assignments))
+            matched += MergeUpdate(Option(cond).map(_.trim),
+              Some(assignmentsOf(sets, "MERGE UPDATE")))
           case other => throw new IllegalArgumentException(
             s"unsupported MERGE clause: WHEN $other")
         }
@@ -1229,23 +1205,17 @@ object GraftSqlParser {
   }
 }
 
-/** `MERGE INTO txtable.\`root\` USING <src> ON t.k = s.k WHEN MATCHED
-  * THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *` — the canonical
-  * upsert, delegated to [[TxTable.merge]] (copy-on-write, manifest-
-  * interval candidate pruning, file-level conflict detection). The
-  * source clause is any table reference or parenthesized subquery;
-  * it is evaluated through the full session SQL pipeline. */
 /** `EXPLAIN MERGE/UPDATE/DELETE …` → the DRY-RUN manifest
   * classification (r14 verdict #6): one row of accounting — what the
   * real statement would drop metadata-only, rewrite, and keep, plus the
   * prune class that decided — computed from the SAME factored probes
-  * the real run uses ([[graft.tables.TxTable#dryRunMerge]] /
-  * `dryRunBand` / `dryRunWhere`) and committing NOTHING (SqlTableSpec
-  * pins version-before == version-after and dry-run counts == the
+  * the real run uses ([[graft.tables.TxTable#dryRunMerge]] for MERGE,
+  * [[graft.tables.TxTable#dryRunWhere]] — the one WHERE classification
+  * — for UPDATE and DELETE) and committing NOTHING (SqlTableSpec pins
+  * version-before == version-after and dry-run counts == the
   * subsequent real run's result counts). */
 case class TxDryRunCommand(root: String, kind: String,
-    sourceSql: Option[String], keys: Seq[String],
-    band: Option[(String, Long, Long)], pred: Option[String])
+    sourceSql: Option[String], keys: Seq[String], pred: Option[String])
     extends LeafRunnableCommand {
   import GraftSqlParser.attr
   override val output: Seq[Attribute] = Seq(
@@ -1256,11 +1226,10 @@ case class TxDryRunCommand(root: String, kind: String,
   override def run(spark: SparkSession): Seq[Row] = {
     GraftSqlParser.viewDmlTarget(root, "EXPLAIN (dry run)", routable = false)
     val t = TxTable.open(root)
-    val d = (sourceSql, band, pred) match {
-      case (Some(src), _, _) =>
+    val d = (sourceSql, pred) match {
+      case (Some(src), _) =>
         t.dryRunMerge(spark, spark.sql(s"SELECT * FROM $src"), keys)
-      case (_, Some((c, lo, hi)), _) => t.dryRunBand(kind, c, lo, hi)
-      case (_, _, Some(p)) => t.dryRunWhere(spark, kind, p)
+      case (_, Some(p)) => t.dryRunWhere(spark, kind, p)
       case _ => throw new IllegalStateException("empty dry-run spec")
     }
     Seq(Row(d.operation, d.filesTotal, d.candidates, d.covered,
@@ -1268,6 +1237,12 @@ case class TxDryRunCommand(root: String, kind: String,
   }
 }
 
+/** `MERGE INTO txtable.\`root\` USING <src> ON t.k = s.k WHEN MATCHED
+  * THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *` — the canonical
+  * upsert, delegated to [[TxTable.merge]] (copy-on-write, manifest-
+  * interval candidate pruning, file-level conflict detection). The
+  * source clause is any table reference or parenthesized subquery;
+  * it is evaluated through the full session SQL pipeline. */
 case class TxMergeCommand(root: String, sourceSql: String, keys: Seq[String])
     extends LeafRunnableCommand {
   import GraftSqlParser.attr
@@ -1282,59 +1257,13 @@ case class TxMergeCommand(root: String, sourceSql: String, keys: Seq[String])
   }
 }
 
-/** `UPDATE txtable.\`root\` SET col = <expr>[, …] WHERE <statCol>
-  * BETWEEN lo AND hi` — Delta's UPDATE DML, expressed as the band
-  * rewrite the table layer already proves correct
-  * ([[TxTable.overwriteWhere]]): read exactly the band (manifest-pruned),
-  * apply the SET expressions through the full Catalyst expression
-  * surface, republish the band copy-on-write. Files wholly outside the
-  * band are carried BY NAME — at 100 TB an UPDATE costs the touched
-  * band, never the table. The WHERE is restricted to a stat-column
-  * range because that is what the band-replace primitive can prove
-  * leak-free (ReplaceWhereSpec); anything else fails loudly at parse. */
-case class TxUpdateCommand(root: String, sets: Seq[(String, String)],
-    statCol: String, lo: Long, hi: Long) extends LeafRunnableCommand {
-  import GraftSqlParser.attr
-  override val output: Seq[Attribute] = Seq(
-    attr("version", IntegerType), attr("dropped_files", IntegerType),
-    attr("rewritten_files", IntegerType), attr("kept_files", IntegerType),
-    attr("new_files", IntegerType))
-  override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{col, expr}
-    GraftSqlParser.viewDmlTarget(root, "UPDATE", routable = true).foreach {
-      case (b, vp) => // view target: the band becomes a general predicate
-        val band = s"$statCol BETWEEN $lo AND $hi"
-        val pred = vp.map(p => s"($band) AND ($p)").getOrElse(band)
-        val r = TxTable.open(b).updateWhere(spark, pred, sets)
-        return Seq(Row(r.version, r.droppedFiles, r.rewrittenFiles,
-          r.keptFiles, r.newFiles))
-    }
-    val t = TxTable.open(root)
-    val band = t.readWhere(spark, statCol, lo, hi).df
-    val names = sets.map(_._1)
-    require(names.distinct.length == names.length,
-      s"UPDATE SET assigns ${names.diff(names.distinct).distinct.mkString(", ")} more than once")
-    names.foreach(n => require(band.columns.contains(n),
-      s"UPDATE SET names unknown column $n (have ${band.columns.mkString(", ")})"))
-    // ANSI UPDATE semantics: every SET rhs reads the PRE-update row (so
-    // `SET a = b, b = a` swaps) — one projection against the original
-    // band, never sequential withColumn, which would leak already-updated
-    // values into later assignments' rhs.
-    val setMap = sets.toMap
-    val updated = band.select(band.columns.toSeq.map { c =>
-      setMap.get(c).map(rhs => expr(rhs).as(c)).getOrElse(col(c))
-    }: _*)
-    val r = t.overwriteWhere(spark, statCol, lo, hi, updated)
-    Seq(Row(r.version, r.droppedFiles, r.rewrittenFiles, r.keptFiles, r.newFiles))
-  }
-}
-
 /** `UPDATE txtable.\`root\` SET col = <expr>[, …] WHERE <predicate>` —
-  * the GENERAL Delta-style UPDATE ([[TxTable.updateWhere]]): manifest
-  * stats prune candidate files through the predicate's conjunct
-  * intervals, candidates rewrite copy-on-write under a conditional
-  * projection with ANSI pre-update-row SET semantics. Band-shaped
-  * statements never reach here (the BETWEEN fast path matches first). */
+  * the Delta-style UPDATE ([[TxTable.updateWhere]]) for every WHERE
+  * spelling, BETWEEN bands included: manifest stats prune candidate
+  * files through the predicate's conjunct intervals, candidates
+  * rewrite copy-on-write under a conditional projection with ANSI
+  * pre-update-row SET semantics. SET may move rows out of the band the
+  * WHERE names (`SET k = k + 1000 WHERE k BETWEEN 0 AND 9`). */
 case class TxUpdateWhereCommand(root: String, sets: Seq[(String, String)],
     predicateSql: String) extends LeafRunnableCommand {
   import GraftSqlParser.attr

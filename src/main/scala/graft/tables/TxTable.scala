@@ -922,7 +922,7 @@ final class TxTable(val root: String, val statCols: Seq[String],
     // nothing (its rewrite is content-preserving); a key with no stat
     // component has no sound envelope — every fresh file conflicts.
     val guard = multiKeyGuard(spark, base, src, keys)
-    val version = commitCowGuarded(base, candidates, entries, "merge", guard,
+    val version = commitCow(base, candidates, entries, "merge", guard,
       txns = txns, meta = evolvedMeta)
     MergeResult(version, rewrittenFiles = candidates.size,
       keptFiles = kept.size, newFiles = entries.size)
@@ -1244,7 +1244,7 @@ final class TxTable(val root: String, val statCols: Seq[String],
                 "govern every target row)"))
         }
       } else keyGuard
-    val version = commitCowGuarded(base, candidates, entries, "merge", guard,
+    val version = commitCow(base, candidates, entries, "merge", guard,
       txns = txns, meta = evolvedMeta)
     MergeResult(version, rewrittenFiles = candidates.size,
       keptFiles = kept.size, newFiles = entries.size)
@@ -1586,7 +1586,7 @@ final class TxTable(val root: String, val statCols: Seq[String],
         case None => Nil
         case Some(s) => writeDataFiles(spark, s) // cancelled-to-nothing still commits below
       }
-      commitCowGuarded(base, candidates, entries, "CDC apply", guard,
+      commitCow(base, candidates, entries, "CDC apply", guard,
         txns = Map(appId -> watermark))
       true
     } finally { persisted.foreach(_.unpersist(blocking = false)); () }
@@ -1622,55 +1622,21 @@ final class TxTable(val root: String, val statCols: Seq[String],
     srcV
   }
 
-  /** Copy-on-write DELETE of rows with `lo <= statCol <= hi`. The
-    * manifest stats split the file list three ways, and only one class
-    * costs a data read:
-    *  - DISJOINT files ([min,max] ∩ [lo,hi] = ∅): carried BY NAME —
-    *    stats prove no row matches;
-    *  - FULLY-COVERED files (lo ≤ min and max ≤ hi): DROPPED from the
-    *    new manifest without reading a byte — the metadata-only delete
-    *    (at 100 TB, retention deletes of whole time ranges are THIS
-    *    path: truncating a month costs zero data I/O);
-    *  - STRADDLING files: rewritten without the matching rows (each
-    *    keeps at least its min- or max-valued row, so rewrites are
-    *    never empty).
-    * Exact min/max make the classification sound both ways: a dropped
-    * file cannot hold a survivor, a kept file cannot hold a victim.
-    * Historical snapshots still read the dropped/rewritten files until
-    * [[vacuum]]; a lost commit race rebases across provably disjoint
-    * concurrent commits and aborts on real conflicts ([[commitCow]]). */
+  /** Copy-on-write DELETE of rows with `lo <= statCol <= hi` — the typed
+    * face of [[deleteWhere]] (its BETWEEN predicate earns the same
+    * classes: disjoint files carry by name, fully-covered files drop
+    * metadata-only, straddlers rewrite without the band). At 100 TB,
+    * retention deletes of whole time ranges are the metadata-only drop:
+    * truncating a month costs zero data I/O. */
   def delete(spark: SparkSession, statCol: String, lo: Long, hi: Long): DeleteResult =
-    deleteFrom(spark, snapshot(), statCol, lo, hi)
+    deleteWhere(spark, bandSql(snapshot(), statCol, lo, hi))
 
-  /** Delete against an explicit base snapshot — the seam that lets a spec
-    * interleave a competing commit between base-read and publish
-    * (mergeFrom precedent). */
-  private[graft] def deleteFrom(spark: SparkSession, base: Snapshot,
-      statCol: String, lo: Long, hi: Long): DeleteResult = {
-    val p = phys(base, statCol)
-    require(statCols.contains(p), s"$statCol is not a stat column ($statCols)")
-    require(base.version > 0, "delete from an empty table?")
-    // Missing stats (a narrow-writer append after a stats evolution):
-    // the file MAY hold victims (touched) but can never be proven fully
-    // covered — it lands in the rewrite class, which is always sound.
-    val (touched, kept) = base.files.partition { f =>
-      f.maxs.get(p).forall(_ >= lo) && f.mins.get(p).forall(_ <= hi)
-    }
-    val (covered, straddling) = touched.partition(_.provablyAllIn(p, lo, hi))
-    val entries =
-      if (straddling.isEmpty) Nil
-      else writeDataFiles(spark,
-        readFiles(spark, straddling, base.colMap) // DV-aware: never resurrect
-          // NULL statCol rows are NOT in the band: coalesce keeps them
-          // (bare NOT(NULL) is NULL and the filter would drop survivors)
-          .filter(!coalesce(col(statCol) >= lo && col(statCol) <= hi, lit(false))))
-    // rebase across disjoint concurrent commits; a concurrent file
-    // overlapping [lo, hi] would hold victims this delete never saw
-    val version = commitCow(base, touched, entries, "delete",
-      Some((p, lo, hi)))
-    DeleteResult(version, droppedFiles = covered.size,
-      rewrittenFiles = straddling.size, keptFiles = kept.size,
-      newFiles = entries.size)
+  /** `lo <= statCol <= hi` as predicate text for the typed band verbs,
+    * refused unless `statCol` carries stats in `base`. */
+  private def bandSql(base: Snapshot, statCol: String, lo: Long, hi: Long): String = {
+    require(statCols.contains(phys(base, statCol)),
+      s"$statCol is not a stat column ($statCols)")
+    s"`$statCol` BETWEEN $lo AND $hi"
   }
 
   /** Per-STAT-COLUMN interval constraints implied by the TOP-LEVEL
@@ -1770,43 +1736,77 @@ final class TxTable(val root: String, val statCols: Seq[String],
       f.maxs.get(p).forall(_ >= lo) && f.mins.get(p).forall(_ <= hi)
     }
 
-  /** Copy-on-write DELETE of rows matching an ARBITRARY predicate — the
-    * general form of the banded [[delete]] (round-10 verdict #2).
-    * Manifest stats prune the file list through the predicate's conjunct
-    * intervals ([[predicateBands]]):
-    *  - files PROVABLY DISJOINT from some interval carry by name;
-    *  - files PROVABLY FULLY COVERED (no residual conjunct and stats
-    *    range inside every interval) drop metadata-only — zero data I/O;
-    *  - the rest rewrite without the matching rows (DV-aware read, so
-    *    already-deleted rows never resurrect; rows where the predicate
-    *    evaluates NULL survive — ANSI DELETE removes only TRUE).
-    * A non-stat-column predicate degrades soundly: no interval is
-    * derivable, every file is a rewrite candidate, and the commit guard
-    * treats every concurrent append as a conflict. At 100 TB the cost is
-    * the files the predicate's selectivity on the table's clustered
-    * columns leaves touched — retention deletes stay metadata-only. */
-  def deleteWhere(spark: SparkSession, predicateSql: String): DeleteResult = {
-    val base = snapshot()
-    require(base.version > 0, "delete from an empty table?")
+  /** The file split of one row-level DML statement, as [[classify]]
+    * computed it: `touched` = `covered` ++ `straddling` leave the
+    * manifest, `kept` carry by name, `guard` is the commit's fresh-file
+    * conflict test and `pruneClass` names the decision for EXPLAIN. */
+  private case class FileSplit(touched: Seq[FileEntry], covered: Seq[FileEntry],
+      straddling: Seq[FileEntry], kept: Seq[FileEntry],
+      guard: (FileEntry => Boolean, String), pruneClass: String)
+
+  /** The ONE manifest classification every row-level DML verb and its
+    * dry run act on, from the predicate's stat-column intervals
+    * ([[predicateBands]]) — how the WHERE is spelled never picks it:
+    *  - KEPT: provably disjoint from some interval — no row matches;
+    *  - COVERED (only when `dropCovered`): no residual conjunct, stats
+    *    range inside every interval and zero nulls — every row matches,
+    *    so the file drops metadata-only with zero data I/O. An UPDATE
+    *    must rewrite matching rows and passes false;
+    *  - STRADDLING: the rest of the touched set — read and rewritten.
+    * Exact min/max make the split sound both ways: a dropped file holds
+    * no survivor, a kept file no victim; missing stats land a file in
+    * the straddling class. The guard treats a concurrently added file
+    * that intersects every interval as a conflict ([[commitCow]]; with
+    * no derivable interval every fresh file conflicts). */
+  private def classify(spark: SparkSession, base: Snapshot, predicateSql: String,
+      dropCovered: Boolean): FileSplit = {
     val (bands, residual) = predicateBands(spark, predicateSql, base)
     val (touched, kept) = base.files.partition(bandsIntersect(bands))
     val (covered, straddling) =
-      if (residual || bands.isEmpty) (Seq.empty[FileEntry], touched)
+      if (!dropCovered || residual || bands.isEmpty) (Seq.empty[FileEntry], touched)
       else touched.partition(f =>
         bands.forall { case (p, (lo, hi)) => f.provablyAllIn(p, lo, hi) })
+    val pruneClass =
+      if (bands.isEmpty) "none:no-stat-conjunct"
+      else bands.toSeq.sortBy(_._1).map { case (p, (lo, hi)) =>
+        s"band:$p[$lo,$hi]"
+      }.mkString("+") + (if (residual) "+residual" else "")
+    FileSplit(touched, covered, straddling, kept,
+      (bandsIntersect(bands) _, s"may hold rows matching `$predicateSql`"),
+      pruneClass)
+  }
+
+  /** Copy-on-write DELETE of rows matching an ARBITRARY predicate.
+    * [[classify]] splits the file list: kept files carry by name,
+    * covered files drop metadata-only, and straddlers rewrite without
+    * the matching rows (DV-aware read, so already-deleted rows never
+    * resurrect; rows where the predicate evaluates NULL survive — ANSI
+    * DELETE removes only TRUE). A non-stat-column predicate degrades
+    * soundly: every file is a rewrite candidate and every concurrent
+    * append conflicts. At 100 TB the cost is the files the predicate's
+    * selectivity on the table's clustered columns leaves touched —
+    * retention deletes stay metadata-only. Historical snapshots still
+    * read the dropped/rewritten files until [[vacuum]]. */
+  def deleteWhere(spark: SparkSession, predicateSql: String): DeleteResult =
+    deleteWhereFrom(spark, snapshot(), predicateSql)
+
+  /** Delete against an explicit base snapshot — the seam that lets a spec
+    * interleave a competing commit between base-read and publish
+    * (mergeFrom precedent). */
+  private[graft] def deleteWhereFrom(spark: SparkSession, base: Snapshot,
+      predicateSql: String): DeleteResult = {
+    require(base.version > 0, "delete from an empty table?")
+    val split = classify(spark, base, predicateSql, dropCovered = true)
+    // an all-victims rewrite writes zero rows and so zero files
     val entries =
-      if (straddling.isEmpty) Nil
-      else {
-        val survivors = readFiles(spark, straddling, base.colMap, base.meta)
-          .filter(!coalesce(expr(predicateSql), lit(false)))
-        // an all-victims rewrite set legitimately produces ZERO files
-        if (survivors.isEmpty) Nil else writeDataFiles(spark, survivors)
-      }
-    val version = commitCowGuarded(base, touched, entries, "delete",
-      Some((bandsIntersect(bands) _,
-        s"may hold rows matching `$predicateSql`")))
-    DeleteResult(version, droppedFiles = covered.size,
-      rewrittenFiles = straddling.size, keptFiles = kept.size,
+      if (split.straddling.isEmpty) Nil
+      else writeDataFiles(spark,
+        readFiles(spark, split.straddling, base.colMap, base.meta)
+          .filter(!coalesce(expr(predicateSql), lit(false))))
+    val version = commitCow(base, split.touched, entries, "delete",
+      Some(split.guard))
+    DeleteResult(version, droppedFiles = split.covered.size,
+      rewrittenFiles = split.straddling.size, keptFiles = split.kept.size,
       newFiles = entries.size)
   }
 
@@ -1833,42 +1833,17 @@ final class TxTable(val root: String, val statCols: Seq[String],
         else s"interval-intersect:${statKeys.mkString(",")}")
   }
 
-  /** DRY-RUN classification of a banded UPDATE/DELETE — [[deleteFrom]]'s
-    * exact partition (touched by [min,max] overlap, covered by
-    * provably-all-in), committed never. */
-  def dryRunBand(operation: String, statCol: String, lo: Long,
-      hi: Long): TxTable.DmlDryRun = {
-    val base = snapshot()
-    val p = phys(base, statCol)
-    require(statCols.contains(p), s"$statCol is not a stat column ($statCols)")
-    val (touched, kept) = base.files.partition { f =>
-      f.maxs.get(p).forall(_ >= lo) && f.mins.get(p).forall(_ <= hi)
-    }
-    val (covered, straddling) = touched.partition(_.provablyAllIn(p, lo, hi))
-    TxTable.DmlDryRun(operation, base.files.size, touched.size,
-      covered.size, straddling.size, kept.size, s"band:$statCol[$lo,$hi]")
-  }
-
-  /** DRY-RUN classification of a predicate UPDATE/DELETE —
-    * [[deleteWhere]]'s exact partition through [[predicateBands]]
-    * (residual conjuncts disqualify the covered class, exactly as the
-    * real run refuses metadata-only drops it cannot prove). */
+  /** DRY-RUN classification of a predicate UPDATE/DELETE: the same
+    * [[classify]] split the real run acts on (an update drops nothing
+    * metadata-only, so it reports no covered class), committed never. */
   def dryRunWhere(spark: SparkSession, operation: String,
       predicateSql: String): TxTable.DmlDryRun = {
     val base = snapshot()
-    val (bands, residual) = predicateBands(spark, predicateSql, base)
-    val (touched, kept) = base.files.partition(bandsIntersect(bands))
-    val (covered, straddling) =
-      if (residual || bands.isEmpty) (Seq.empty[FileEntry], touched)
-      else touched.partition(f =>
-        bands.forall { case (p, (lo, hi)) => f.provablyAllIn(p, lo, hi) })
-    val cls =
-      if (bands.isEmpty) "none:no-stat-conjunct"
-      else bands.toSeq.sortBy(_._1).map { case (p, (lo, hi)) =>
-        s"band:$p[$lo,$hi]"
-      }.mkString("+") + (if (residual) "+residual" else "")
-    TxTable.DmlDryRun(operation, base.files.size, touched.size,
-      covered.size, straddling.size, kept.size, cls)
+    val split = classify(spark, base, predicateSql,
+      dropCovered = operation == "delete")
+    TxTable.DmlDryRun(operation, base.files.size, split.touched.size,
+      split.covered.size, split.straddling.size, split.kept.size,
+      split.pruneClass)
   }
 
   /** Copy-on-write DELETE of rows whose `column` value appears in (IN) —
@@ -1940,7 +1915,8 @@ final class TxTable(val root: String, val statCols: Seq[String],
               cand.filter(col(column).isNull)
                 .unionByName(cand.join(k,
                   cand(column) === k("__k"), "left_semi"))
-          if (survivors.isEmpty) Nil else writeDataFiles(spark, survivors)
+          // an all-victims candidate set writes zero rows and so zero files
+          writeDataFiles(spark, survivors)
         }
       val guard: Option[(FileEntry => Boolean, String)] =
         if (negate)
@@ -1961,7 +1937,7 @@ final class TxTable(val root: String, val statCols: Seq[String],
           Some(((f: FileEntry) => f.mins.get(p).forall(_ <= mx) &&
             f.maxs.get(p).forall(_ >= mn), s"overlap $p in [$mn, $mx]"))
         }
-      val version = commitCowGuarded(base, candidates, entries, "delete", guard)
+      val version = commitCow(base, candidates, entries, "delete", guard)
       DeleteResult(version, droppedFiles = 0,
         rewrittenFiles = candidates.size, keptFiles = kept.size,
         newFiles = entries.size)
@@ -2052,15 +2028,15 @@ final class TxTable(val root: String, val statCols: Seq[String],
           Some(((f: FileEntry) => f.mins.get(p).forall(_ <= mx) &&
             f.maxs.get(p).forall(_ >= mn), s"overlap $p in [$mn, $mx]"))
         }
-      val version = commitCowGuarded(base, candidates, entries, "update", guard)
+      val version = commitCow(base, candidates, entries, "update", guard)
       DeleteResult(version, droppedFiles = 0,
         rewrittenFiles = candidates.size, keptFiles = kept.size,
         newFiles = entries.size)
     } finally { k.unpersist(blocking = false); () }
   }
 
-  /** Copy-on-write UPDATE under an ARBITRARY predicate: [[deleteWhere]]'s
-    * prune classes minus the metadata-only one (an update must rewrite
+  /** Copy-on-write UPDATE under an ARBITRARY predicate: the [[classify]]
+    * split minus the metadata-only class (an update must rewrite
     * matching ROWS, so provably-fully-covered files are rewrites too).
     * Each candidate file's rows pass through ONE conditional projection —
     * `WHEN pred THEN rhs ELSE old` per assigned column, every rhs reading
@@ -2073,12 +2049,11 @@ final class TxTable(val root: String, val statCols: Seq[String],
     val names = sets.map(_._1)
     require(names.distinct.length == names.length,
       s"UPDATE SET assigns ${names.diff(names.distinct).distinct.mkString(", ")} more than once")
-    val (bands, _) = predicateBands(spark, predicateSql, base)
-    val (touched, kept) = base.files.partition(bandsIntersect(bands))
+    val split = classify(spark, base, predicateSql, dropCovered = false)
     val entries =
-      if (touched.isEmpty) Nil
+      if (split.touched.isEmpty) Nil
       else {
-        val cand = readFiles(spark, touched, base.colMap, base.meta)
+        val cand = readFiles(spark, split.touched, base.colMap, base.meta)
         names.foreach(n => require(cand.columns.contains(n),
           s"UPDATE SET names unknown column $n (have ${cand.columns.mkString(", ")})"))
         val setMap = sets.toMap
@@ -2090,11 +2065,11 @@ final class TxTable(val root: String, val statCols: Seq[String],
         }: _*)
         writeDataFiles(spark, updated)
       }
-    val version = commitCowGuarded(base, touched, entries, "update",
-      Some((bandsIntersect(bands) _,
-        s"may hold rows matching `$predicateSql`")))
-    DeleteResult(version, droppedFiles = 0, rewrittenFiles = touched.size,
-      keptFiles = kept.size, newFiles = entries.size)
+    val version = commitCow(base, split.touched, entries, "update",
+      Some(split.guard))
+    DeleteResult(version, droppedFiles = 0,
+      rewrittenFiles = split.touched.size, keptFiles = split.kept.size,
+      newFiles = entries.size)
   }
 
   /** Unconditional `DELETE FROM t` (truncate): every current file leaves
@@ -2132,20 +2107,20 @@ final class TxTable(val root: String, val statCols: Seq[String],
     * clobber or duplicate data it never declared ownership of, so it
     * refuses before anything becomes visible (staged files deleted, the
     * Delta replaceWhere contract). Victim classification is
-    * [[delete]]'s: covered files drop metadata-only, straddlers rewrite
-    * minus the band, disjoint files carry by name. Lost commit races
-    * rebase across provably disjoint concurrent commits ([[commitCow]]
-    * with the [lo, hi] guard). `newFiles` counts replacement +
-    * straddler-rewrite files. */
+    * [[classify]]'s for the band: covered files drop metadata-only,
+    * straddlers rewrite minus the band, disjoint files carry by name.
+    * Lost commit races rebase across provably disjoint concurrent
+    * commits ([[commitCow]] with the band guard). `newFiles` counts
+    * replacement + straddler-rewrite files. */
   def overwriteWhere(spark: SparkSession, statCol: String, lo: Long, hi: Long,
       df: DataFrame): DeleteResult =
     overwriteWhereFrom(spark, snapshot(), statCol, lo, hi, df)
 
   private[graft] def overwriteWhereFrom(spark: SparkSession, base: Snapshot,
       statCol: String, lo: Long, hi: Long, df: DataFrame): DeleteResult = {
-    val p = phys(base, statCol)
-    require(statCols.contains(p), s"$statCol is not a stat column ($statCols)")
+    val band = bandSql(base, statCol, lo, hi)
     require(base.version > 0, "overwrite into an empty table: use append")
+    val p = phys(base, statCol)
     val replacement = writeDataFiles(spark, df)
     // provablyAllIn: range inside the band AND zero nulls — a NULL-keyed
     // replacement row lies outside every band and must be rejected too
@@ -2158,21 +2133,18 @@ final class TxTable(val root: String, val statCols: Seq[String],
           escapees.map(e => s"${e.path} spans [${e.mins.get(p).orNull}, " +
             s"${e.maxs.get(p).orNull}]").mkString("(", "; ", ")"))
     }
-    val (touched, kept) = base.files.partition { f =>
-      f.maxs.get(p).forall(_ >= lo) && f.mins.get(p).forall(_ <= hi)
-    }
-    val (covered, straddling) = touched.partition(_.provablyAllIn(p, lo, hi))
+    val split = classify(spark, base, band, dropCovered = true)
     val rewrites =
-      if (straddling.isEmpty) Nil
+      if (split.straddling.isEmpty) Nil
       else writeDataFiles(spark,
-        readFiles(spark, straddling, base.colMap) // DV-aware: never resurrect
+        readFiles(spark, split.straddling, base.colMap) // DV-aware: never resurrect
           // NULL statCol rows are NOT in the band: coalesce keeps them
           // (bare NOT(NULL) is NULL and the filter would drop survivors)
-          .filter(!coalesce(col(statCol) >= lo && col(statCol) <= hi, lit(false))))
-    val version = commitCow(base, touched, rewrites ++ replacement,
-      "overwriteWhere", Some((p, lo, hi)))
-    DeleteResult(version, droppedFiles = covered.size,
-      rewrittenFiles = straddling.size, keptFiles = kept.size,
+          .filter(!coalesce(expr(band), lit(false))))
+    val version = commitCow(base, split.touched, rewrites ++ replacement,
+      "overwriteWhere", Some(split.guard))
+    DeleteResult(version, droppedFiles = split.covered.size,
+      rewrittenFiles = split.straddling.size, keptFiles = split.kept.size,
       newFiles = rewrites.size + replacement.size)
   }
 
@@ -2197,7 +2169,7 @@ final class TxTable(val root: String, val statCols: Seq[String],
       if (oldDvs.isEmpty) victims
       else victims.unionByName(spark.read.parquet(
         oldDvs.map(d => dataDir.resolve(d).toString): _*)).distinct()
-    val stage = dataDir.resolve(s".stage-${UUID.randomUUID()}")
+    val stage = dataDir.resolve(s"stage-${UUID.randomUUID()}")
     // __pfile rides the partition PATH; (file, pos) stay data columns
     // for the read-side anti-join
     all.withColumn("__pfile", col("file"))
@@ -2257,34 +2229,14 @@ final class TxTable(val root: String, val statCols: Seq[String],
     * [[materializeDeletes]] folds the vectors in. Victims are computed
     * DV-aware (already-deleted rows just re-enter the vector —
     * idempotent under the anti-join); existing vectors of touched
-    * files are unioned forward so nothing resurrects. Commit races
-    * rebase/abort via the same conflict detection as delete. */
+    * files are unioned forward so nothing resurrects. The typed band
+    * face of [[deletePositionalWhere]]. */
   def deletePositional(spark: SparkSession, statCol: String,
-      lo: Long, hi: Long): PositionalDeleteResult = {
-    val base = snapshot()
-    val p = phys(base, statCol)
-    require(statCols.contains(p), s"$statCol is not a stat column ($statCols)")
-    require(base.version > 0, "delete from an empty table?")
-    val (touched, kept) = base.files.partition { f =>
-      f.maxs.get(p).forall(_ >= lo) && f.mins.get(p).forall(_ <= hi)
-    }
-    val (covered, straddling) = touched.partition(_.provablyAllIn(p, lo, hi))
-    val entries =
-      if (straddling.isEmpty) Nil
-      else {
-        val victims = readWithPositions(spark, straddling, base)
-          .filter(col(statCol) >= lo && col(statCol) <= hi) // logical names
-          .select(col("__file").as("file"), col("__pos").as("pos"))
-        writeDvEntries(spark, straddling, victims)
-      }
-    val version = commitCow(base, touched, entries, "positional delete",
-      Some((p, lo, hi)))
-    PositionalDeleteResult(version, droppedFiles = covered.size,
-      dvFiles = straddling.size, keptFiles = kept.size)
-  }
+      lo: Long, hi: Long): PositionalDeleteResult =
+    deletePositionalWhere(spark, bandSql(snapshot(), statCol, lo, hi))
 
-  /** POSITIONAL delete under an ARBITRARY predicate — [[deleteWhere]]'s
-    * prune classes with [[deletePositional]]'s merge-on-read write path:
+  /** POSITIONAL delete under an ARBITRARY predicate — the [[classify]]
+    * split with [[deletePositional]]'s merge-on-read write path:
     * provably-fully-covered files still drop METADATA-ONLY (cheaper than
     * any vector), provably-disjoint files carry by name, and the
     * candidates in between get their matching ROW POSITIONS appended to
@@ -2295,30 +2247,24 @@ final class TxTable(val root: String, val statCols: Seq[String],
     * LOGICAL names (raw files carry physical names — the column mapping
     * is applied before the filter); rows where it evaluates NULL
     * survive. Existing vectors of touched files union forward; commit
-    * races use the multi-band fresh-file conflict guard. */
+    * races use the split's fresh-file conflict guard. */
   def deletePositionalWhere(spark: SparkSession,
       predicateSql: String): PositionalDeleteResult = {
     val base = snapshot()
     require(base.version > 0, "delete from an empty table?")
-    val (bands, residual) = predicateBands(spark, predicateSql, base)
-    val (touched, kept) = base.files.partition(bandsIntersect(bands))
-    val (covered, straddling) =
-      if (residual || bands.isEmpty) (Seq.empty[FileEntry], touched)
-      else touched.partition(f =>
-        bands.forall { case (p, (lo, hi)) => f.provablyAllIn(p, lo, hi) })
+    val split = classify(spark, base, predicateSql, dropCovered = true)
     val entries =
-      if (straddling.isEmpty) Nil
+      if (split.straddling.isEmpty) Nil
       else {
-        val victims = readWithPositions(spark, straddling, base)
+        val victims = readWithPositions(spark, split.straddling, base)
           .filter(coalesce(expr(predicateSql), lit(false)))
           .select(col("__file").as("file"), col("__pos").as("pos"))
-        writeDvEntries(spark, straddling, victims)
+        writeDvEntries(spark, split.straddling, victims)
       }
-    val version = commitCowGuarded(base, touched, entries, "positional delete",
-      Some((bandsIntersect(bands) _,
-        s"may hold rows matching `$predicateSql`")))
-    PositionalDeleteResult(version, droppedFiles = covered.size,
-      dvFiles = straddling.size, keptFiles = kept.size)
+    val version = commitCow(base, split.touched, entries, "positional delete",
+      Some(split.guard))
+    PositionalDeleteResult(version, droppedFiles = split.covered.size,
+      dvFiles = split.straddling.size, keptFiles = split.kept.size)
   }
 
   /** MERGE-ON-READ UPDATE (Delta's DV-based UPDATE): rows matching the
@@ -2342,8 +2288,8 @@ final class TxTable(val root: String, val statCols: Seq[String],
     val names = sets.map(_._1)
     require(names.distinct.length == names.length,
       s"UPDATE SET assigns ${names.diff(names.distinct).distinct.mkString(", ")} more than once")
-    val (bands, _) = predicateBands(spark, predicateSql, base)
-    val (touched, kept) = base.files.partition(bandsIntersect(bands))
+    val split = classify(spark, base, predicateSql, dropCovered = false)
+    val touched = split.touched
     val entries =
       if (touched.isEmpty) Nil
       else {
@@ -2378,11 +2324,10 @@ final class TxTable(val root: String, val statCols: Seq[String],
           dvEntries ++ imageEntries
         } finally { alivePersisted.unpersist(blocking = false); () }
       }
-    val version = commitCowGuarded(base, touched, entries, "update",
-      Some((bandsIntersect(bands) _,
-        s"may hold rows matching `$predicateSql`")))
+    val version = commitCow(base, touched, entries, "update",
+      Some(split.guard))
     PositionalDeleteResult(version, droppedFiles = 0,
-      dvFiles = touched.size, keptFiles = kept.size)
+      dvFiles = touched.size, keptFiles = split.kept.size)
   }
 
   /** MERGE-ON-READ upsert (DV-based MERGE — the Delta deletion-vector
@@ -2449,7 +2394,7 @@ final class TxTable(val root: String, val statCols: Seq[String],
       }
     val srcEntries = writeDataFiles(spark, src)
     val guard = multiKeyGuard(spark, base, src, keys)
-    val version = commitCowGuarded(base, candidates,
+    val version = commitCow(base, candidates,
       dvEntries ++ srcEntries, "merge", guard, txns = txns, meta = evolvedMeta)
     MergeResult(version, rewrittenFiles = 0,
       keptFiles = kept.size + candidates.size, newFiles = srcEntries.size)
@@ -3087,8 +3032,9 @@ final class TxTable(val root: String, val statCols: Seq[String],
     * the droppings of crashed writers (a writer stages data files FIRST
     * and publishes the manifest last, so a crash strands bytes that are
     * invisible to every reader but still bill storage). O(files) driver
-    * metadata, zero data I/O. In-flight staged files are hidden
-    * (`.stage-*`) and never reported. */
+    * metadata, zero data I/O. In-flight staged files live in
+    * `stage-*` directories and are never reported (only plain files
+    * are candidates). */
   def orphanFiles(): Seq[String] = {
     val referenced: Set[String] = listVersions
       .flatMap(v => snapshot(Some(v)).files.flatMap(f => f.path +: f.dv.toSeq))
@@ -3484,7 +3430,7 @@ final class TxTable(val root: String, val statCols: Seq[String],
       else if (estBytes < (16L << 20)) dfPhys.coalesce(1)
       else if (estBytes < (256L << 20)) dfPhys.coalesce(8)
       else dfPhys
-    val stage = dataDir.resolve(s".stage-${UUID.randomUUID()}")
+    val stage = dataDir.resolve(s"stage-${UUID.randomUUID()}")
     val violAggs = constraints.zipWithIndex.map { case (c, i) =>
       sum(when(!expr(c), lit(1L)).otherwise(lit(0L))).as(s"__viol_$i")
     }
@@ -3558,7 +3504,10 @@ final class TxTable(val root: String, val statCols: Seq[String],
         broken.map { case (c, n) => s"CHECK ($c) violated by $n row(s)" }
           .mkString(s"write to $root rejected: ", "; ", ""))
     }
-    val bloomsByCol = computeBlooms(spark, stage.toString)
+    // a zero-row write promotes nothing: no bloom pass over its stage
+    val bloomsByCol =
+      if (stats.isEmpty) Map.empty[String, Map[String, Seq[Long]]]
+      else computeBlooms(spark, stage.toString)
     val entries = stats.map { case (uri, get) =>
       val staged = Paths.get(new java.net.URI(uri).getPath)
       val fresh = s"${UUID.randomUUID()}.parquet"
@@ -3743,13 +3692,16 @@ final class TxTable(val root: String, val statCols: Seq[String],
     *  - a candidate's (path, dv) identity is gone — a concurrent
     *    rewrite/delete/DV touched a file this operation read, so its
     *    staged output was derived from content that no longer exists;
-    *  - `guard` is set and a concurrently ADDED file's [min,max] for
-    *    the guard column overlaps (or lacks stats for) the operation's
-    *    key range — those rows would have changed the operation's own
-    *    candidate selection (a merge would have matched them, a delete
-    *    would have victims there). Content-preserving rewrites
-    *    (compact, z-order, DV materialization) pass None: concurrent
-    *    appends never conflict with them;
+    *  - `guard` is set and a concurrently ADDED file satisfies its test
+    *    — its stats cannot prove it disjoint from the rows the
+    *    operation governs (missing stats never prove it), so those rows
+    *    would have changed the operation's own candidate selection (a
+    *    merge would have matched them, a delete would have victims
+    *    there). Row-level DML passes [[classify]]'s guard (with no
+    *    derivable interval EVERY fresh data file conflicts, the sound
+    *    default); content-preserving rewrites (compact, z-order, DV
+    *    materialization) pass None: concurrent appends never conflict
+    *    with them;
     *  - the constraint set changed — the staged files were validated
     *    against the old one.
     *
@@ -3759,26 +3711,6 @@ final class TxTable(val root: String, val statCols: Seq[String],
     * background maintenance share a table without livelocking each
     * other: an optimizer that aborts on every append never wins. */
   private def commitCow(base: Snapshot, candidates: Seq[FileEntry],
-      entries: Seq[FileEntry], what: String,
-      guard: Option[(String, Long, Long)],
-      txns: Map[String, Long] = Map.empty): Int =
-    commitCowGuarded(base, candidates, entries, what,
-      guard.map { case (key, mn, mx) =>
-        ((f: FileEntry) => f.mins.get(key).forall(_ <= mx) &&
-          f.maxs.get(key).forall(_ >= mn),
-          s"overlap $key in [$mn, $mx]")
-      }, txns)
-
-  /** The copy-on-write commit loop under a GENERAL fresh-file conflict
-    * test: on a lost publish race, rebase across concurrent commits
-    * unless (a) a file this op read was rewritten/deleted, or (b) a
-    * concurrently ADDED file satisfies `freshConflict` — i.e. its stats
-    * cannot prove it disjoint from the rows this operation's predicate
-    * governs. The single-stat-band ops pass an interval test through the
-    * [[commitCow]] wrapper; arbitrary-predicate DML passes the
-    * multi-band test its prune derived ([[predicateBands]] — with no
-    * derivable band EVERY fresh data file conflicts, the sound default). */
-  private def commitCowGuarded(base: Snapshot, candidates: Seq[FileEntry],
       entries: Seq[FileEntry], what: String,
       guard: Option[(FileEntry => Boolean, String)],
       txns: Map[String, Long] = Map.empty,

@@ -169,6 +169,15 @@ class PredicateDmlSpec extends AnyFunSuite with SparkFixture {
     val r = t.deleteWhere(spark, "k BETWEEN 0 AND 49")
     assert(r.droppedFiles == 2 && r.rewrittenFiles == 0 && r.keptFiles == 2,
       s"recorded nonNull == rows must keep the zero-I/O drop class, got $r")
+    // a residual conjunct every row of the first file satisfies: that
+    // straddler rewrites to zero survivors and commits no new file
+    val (t2, rows) = fresh(new scala.util.Random(5L))
+    val hi = t2.snapshot().files.map(_.maxs("k")).min
+    val r2 = t2.deleteWhere(spark, s"k BETWEEN 0 AND $hi AND v >= 0")
+    assert(r2.droppedFiles == 0 && r2.rewrittenFiles == 1 &&
+      r2.keptFiles == 3 && r2.newFiles == 0,
+      s"an all-victims straddler must write no file, got $r2")
+    assert(content(t2) == rows.filter(_._1 > hi).toSet)
   }
 
   test("randomized subquery deletes (deleteWhereIn) equal the set model") {

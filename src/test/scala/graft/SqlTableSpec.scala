@@ -277,6 +277,26 @@ class SqlTableSpec extends AnyFunSuite with SparkFixture {
     intercept[Exception] {
       spark.sql(s"UPDATE ${q(t.root)} SET nope = 1 WHERE k BETWEEN 0 AND 1")
     }
+    // a negative bound is a plain literal: the band prunes to the first
+    // file, and the typed delete's BETWEEN text still earns the
+    // metadata-only class (file [0, 9] lies inside [-5, 9])
+    val rn = spark.sql(
+      s"UPDATE ${q(t.root)} SET v = v WHERE k BETWEEN -5 AND 3").head()
+    assert(rn.getAs[Int]("rewritten_files") == 1 &&
+      rn.getAs[Int]("kept_files") == 3, s"expected a 1-file band, got $rn")
+    val dn = t.delete(spark, "k", -5, 9)
+    assert(dn.droppedFiles == 1 && dn.rewrittenFiles == 0 &&
+      dn.keptFiles == 3 && dn.newFiles == 0, s"expected a metadata-only drop, got $dn")
+    // SET may move rows out of the band the WHERE names, and both
+    // spellings of the band give the same table
+    def rows(x: TxTable) = x.read(spark).orderBy("k").collect()
+      .map(y => (y.getLong(0), y.getLong(1))).toSeq
+    val (tb, tc) = (freshTable(40, 4), freshTable(40, 4))
+    spark.sql(s"UPDATE ${q(tb.root)} SET k = k + 1000 WHERE k BETWEEN 0 AND 9")
+    spark.sql(s"UPDATE ${q(tc.root)} SET k = k + 1000 WHERE k >= 0 AND k <= 9")
+    assert(rows(tb) == (10L until 40L).map(k => (k, k * 10)) ++
+      (0L until 10L).map(k => (k + 1000, k * 10)))
+    assert(rows(tb) == rows(tc))
     // a non-band WHERE is no longer a refusal: it takes the
     // arbitrary-predicate path (its own test below)
     spark.sql(s"UPDATE ${q(t.root)} SET v = -1 WHERE v % 2 = 1")
@@ -335,12 +355,16 @@ class SqlTableSpec extends AnyFunSuite with SparkFixture {
     val young = dataDir.resolve("orphan-young.parquet")
     val staged = dataDir.resolve(".stage-fake")
     JF.copy(some, old); JF.copy(some, young); JF.copy(some, staged)
+    // a writer's in-flight stage directory holds parquet too
+    val stageDir = JF.createDirectory(dataDir.resolve("stage-fake"))
+    JF.copy(some, stageDir.resolve("part-0.parquet"))
     JF.setLastModifiedTime(old, FileTime.fromMillis(0L))
     assert(t.orphanFiles() == Seq("orphan-old.parquet", "orphan-young.parquet"),
       "hidden staging files must never be reported")
     assert(t.gcOrphans(graceMs = 3600000L) == 1, "only the old orphan reclaims")
     assert(t.orphanFiles() == Seq("orphan-young.parquet"))
-    assert(!JF.exists(old) && JF.exists(young) && JF.exists(staged))
+    assert(!JF.exists(old) && JF.exists(young) && JF.exists(staged) &&
+      JF.exists(stageDir.resolve("part-0.parquet")))
     assert(t.read(spark).count() == 20, "referenced files untouched")
   }
 
@@ -1047,15 +1071,17 @@ class SqlTableSpec extends AnyFunSuite with SparkFixture {
     val rm = spark.sql(s"MERGE INTO ${q(t.root)} AS t $mergeTail").head()
     assert(dm.getInt(4) == rm.getInt(1) && dm.getInt(5) == rm.getInt(2),
       s"dry-run straddling/kept must equal the real rewrite/kept: $dm vs $rm")
-    // banded UPDATE: covered files are replaced wholesale (the real
-    // run's dropped class), stragglers rewrite in place
-    val du = spark.sql(s"EXPLAIN UPDATE ${q(t.root)} SET v = v + 1 " +
-      "WHERE k BETWEEN 0 AND 9").head()
-    val ru = spark.sql(s"UPDATE ${q(t.root)} SET v = v + 1 " +
-      "WHERE k BETWEEN 0 AND 9").head()
-    assert(du.getString(0) == "update" && du.getInt(3) == ru.getInt(1) &&
-      du.getInt(4) == ru.getInt(2) && du.getInt(5) == ru.getInt(3),
-      s"got $du vs $ru")
+    // UPDATE: every touched file rewrites (an update drops nothing
+    // metadata-only), however the band is spelled
+    Seq("k BETWEEN 0 AND 9", "k >= 0 AND k <= 9").foreach { where =>
+      val du = spark.sql(s"EXPLAIN UPDATE ${q(t.root)} SET v = v + 1 " +
+        s"WHERE $where").head()
+      val ru = spark.sql(s"UPDATE ${q(t.root)} SET v = v + 1 " +
+        s"WHERE $where").head()
+      assert(du.getString(0) == "update" && du.getInt(3) == ru.getInt(1) &&
+        du.getInt(4) == ru.getInt(2) && du.getInt(5) == ru.getInt(3),
+        s"$where: got $du vs $ru")
+    }
     // predicate DELETE with a residual conjunct: no covered class
     val dd = spark.sql(s"EXPLAIN DELETE FROM ${q(t.root)} " +
       "WHERE k BETWEEN 0 AND 9 AND v % 2 = 0").head()

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.tables.TxTable
 
 /** File-level conflict detection on copy-on-write commits
-  * ([[graft.tables.TxTable]] commitCow): a merge/delete/compact that
+  * ([[graft.tables.TxTable]] commitCow, with the fresh-file guard the
+  * DML's one WHERE classification derives): a merge/delete/compact that
   * loses the publish race REBASES across concurrent commits proven
   * disjoint (none of the files it read were touched, nothing landed
   * inside its key range) instead of aborting on the version counter —
@@ -149,7 +150,7 @@ class TxRebaseSpec extends AnyFunSuite with SparkFixture {
     t.append(spark, keyed(0, 100, 2))
     val base = t.snapshot()
     t.append(spark, keyed(500, 510, 1)) // outside the delete range
-    val res = t.deleteFrom(spark, base, "k", 0, 49)
+    val res = t.deleteWhereFrom(spark, base, "k BETWEEN 0 AND 49")
     assert(res.version == 3)
     import spark.implicits._
     val got = t.read(spark).select(col("k"))

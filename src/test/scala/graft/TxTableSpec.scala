@@ -194,7 +194,7 @@ class TxTableSpec extends AnyFunSuite with SparkFixture {
     val base = t.snapshot()
     t.append(spark, keyed(10, 20, 1))
     intercept[java.util.ConcurrentModificationException] {
-      t.deleteFrom(spark, base, "k", 0, 49)
+      t.deleteWhereFrom(spark, base, "k BETWEEN 0 AND 49")
     }
     // the failed delete left the table intact (its staged rewrite is
     // invisible garbage, the competing append's rows all present)
@@ -317,7 +317,7 @@ class TxTableSpec extends AnyFunSuite with SparkFixture {
     assert(t.read(spark).count() == 60)
     // the rejected write's staged data was reclaimed, not stranded
     assert(Option(Paths.get(t.root, "data").toFile.listFiles()).get
-      .forall(f => !f.getName.startsWith(".stage-")))
+      .forall(f => !f.getName.startsWith("stage-")))
   }
 
   test("a constraint the existing data violates cannot be declared") {

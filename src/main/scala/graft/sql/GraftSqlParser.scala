@@ -107,7 +107,7 @@ object GraftSqlParser {
     "\\s+WHEN\\s+MATCHED\\s+THEN\\s+UPDATE\\s+SET\\s+\\*" +
     "\\s+WHEN\\s+NOT\\s+MATCHED\\s+THEN\\s+INSERT\\s+\\*\\s*;?\\s*$").r
   private val MergeProbe = ("(?is)^\\s*MERGE\\s+INTO\\s+" + Target + ".*").r
-  private val OnEq =
+  private[sql] val OnEq =
     "(?s)^\\s*(?:(\\w+)\\s*\\.\\s*)?(\\w+)\\s*=\\s*(?:(\\w+)\\s*\\.\\s*)?(\\w+)\\s*$".r
 
   // `UPDATE t SET … WHERE c [NOT] IN (SELECT …)` — the update face of
@@ -452,18 +452,6 @@ object GraftSqlParser {
     out.toSeq.filter(_.trim.nonEmpty)
   }
 
-  /** Best-effort recursive delete — the failed-CREATE cleanup path
-    * (never data-plane; the tree is this statement's own staging). */
-  private[sql] def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file.Files
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => { Files.deleteIfExists(f); () })
-      finally walk.close()
-    }
-  }
-
   /** Trailing `;`/whitespace off a captured statement TAIL: the view
     * regexes capture to end-of-text, and a stored definition ending in
     * a semicolon would break every later parenthesized EXPANSION
@@ -515,40 +503,6 @@ object GraftSqlParser {
     }
   }
 
-  /** Txn-map key for the aggregate-mview NULL-sum safety flag: 1 = the
-    * materialized source slice held NO NULL summed value (verified at
-    * create/full-recompute time), so the GROUP-BY delta arithmetic is
-    * exact; 0/absent = unknown or unsafe — refreshes full-recompute.
-    * NULLs ARRIVING later ride change rows, which the incremental path
-    * inspects per refresh, so the invariant holds inductively. */
-  private[sql] val MviewNullsafeKey = "mview:nullsafe"
-
-  /** `SELECT <list> FROM txtable.\`src\` [WHERE p] GROUP BY <keys>` —
-    * the incrementally maintainable aggregate-view shape. */
-  private[sql] val MviewAggSelect = ("(?is)^\\s*SELECT\\s+(.+?)\\s+FROM\\s+" +
-    "txtable\\s*\\.\\s*`([^`]+)`(?:\\s+WHERE\\s+(.+?))?" +
-    "\\s+GROUP\\s+BY\\s+(.+?)\\s*;?\\s*$").r
-
-  private val MviewCountStar = "(?is)^count\\s*\\(\\s*\\*\\s*\\)\\s+AS\\s+(\\w+)$".r
-  private val MviewSumAs = "(?is)^sum\\s*\\((.+)\\)\\s+AS\\s+(\\w+)$".r
-  private val MviewMinAs = "(?is)^min\\s*\\((.+)\\)\\s+AS\\s+(\\w+)$".r
-  private val MviewMaxAs = "(?is)^max\\s*\\((.+)\\)\\s+AS\\s+(\\w+)$".r
-  private val MviewAvgAs = "(?is)^avg\\s*\\((.+)\\)\\s+AS\\s+(\\w+)$".r
-
-  /** The parsed shape of a maintainable GROUP-BY aggregate view:
-    * group columns, the `count(*)` liveness alias, and the
-    * sum/min/max/avg items as (expression, output alias). An avg is
-    * admitted only with COMPANION columns — the view must also carry
-    * `sum(<same expr>)` (and count(*) is already required), because avg
-    * alone is not delta-foldable: the refresh re-derives it from the
-    * maintained sum and count with Spark's own divide-then-cast
-    * semantics, so the maintained value is bit-identical to a
-    * recompute. `avgs` records (expression, sum alias it rides on,
-    * output alias). */
-  private[sql] case class AggView(groups: Seq[String], countAlias: String,
-      sums: Seq[(String, String)], mins: Seq[(String, String)],
-      maxs: Seq[(String, String)], avgs: Seq[(String, String, String)] = Nil)
-
   /** Whether `kw` appears top-level in `s` AS A FUNCTION CALL — the
     * word followed (spaces allowed) by an open paren. */
   private[sql] def topLevelCall(s: String, kw: String): Boolean =
@@ -557,502 +511,6 @@ object GraftSqlParser {
       while (j < s.length && s.charAt(j).isWhitespace) j += 1
       j < s.length && s.charAt(j) == '('
     }
-
-  /** Whether a `sum(<body>)` body extracted by the GREEDY [[MviewSumAs]]
-    * regex is a delta-foldable scalar. A compound select item
-    * (`sum(a) + sum(b) AS c`) extracts a paren-UNBALANCED slice, and
-    * `sum(DISTINCT x)` / an aggregate-bearing body are not foldable as
-    * ±x arithmetic — all must fall to the always-sound full recompute
-    * instead of reaching the delta (or the NULL-probe) SQL, where they
-    * used to throw AnalysisException mid-statement (ADVICE r14). */
-  private[sql] def sumBodyFoldable(e: String): Boolean = {
-    var depth = 0
-    var balanced = true
-    var quote: Char = 0
-    e.foreach { ch =>
-      if (quote != 0) { if (ch == quote) quote = 0 }
-      else ch match {
-        case '\'' | '"' | '`' => quote = ch
-        case '(' => depth += 1
-        case ')' => depth -= 1; if (depth < 0) balanced = false
-        case _ => ()
-      }
-    }
-    balanced && depth == 0 && quote == 0 &&
-      !e.trim.matches("(?is)^DISTINCT[\\s(].*") &&
-      !Seq("COUNT", "SUM", "MIN", "MAX", "AVG").exists(topLevelCall(e, _))
-  }
-
-  /** Parse an aggregate view's select list against its GROUP BY into an
-    * [[AggView]] — the shape whose refresh folds as pure GROUP-BY delta
-    * arithmetic (insert → +1/+x, delete → −1/−x, drop at net count 0).
-    * Requires: simple-name group columns all projected, a `count(*) AS
-    * n` (the group liveness witness), and only `sum/min/max/avg(<expr>)
-    * AS a` beyond that. min/max fold monotonically on insert-only
-    * deltas (least/greatest) and force a TOUCHED-GROUP recheck under
-    * deletes (r14 verdict #2). avg (r15) is admitted when the view ALSO
-    * sums the same expression — the refresh re-derives it as
-    * newSum/newCount with Spark's own divide-then-cast shape, deletes
-    * included; an avg without its companion sum falls to full.
-    * None ⇒ the always-sound full recompute. */
-  private[sql] def parseAggView(selectList: String, groupBy: String)
-      : Option[AggView] = {
-    val groups = splitTopLevel(groupBy).map(_.trim)
-    if (groups.isEmpty || !groups.forall(_.matches("\\w+"))) return None
-    var countAlias: Option[String] = None
-    val sums = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val mins = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val maxs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val avgExprs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val seenGroups = scala.collection.mutable.ArrayBuffer.empty[String]
-    splitTopLevel(selectList).map(_.trim).foreach {
-      case g if g.matches("\\w+") && groups.contains(g) => seenGroups += g; ()
-      case MviewCountStar(a) if countAlias.isEmpty => countAlias = Some(a)
-      case MviewAvgAs(e, a) if sumBodyFoldable(e) => avgExprs += ((e, a)); ()
-      case MviewSumAs(e, a) if sumBodyFoldable(e) => sums += ((e, a)); ()
-      case MviewMinAs(e, a) if sumBodyFoldable(e) => mins += ((e, a)); ()
-      case MviewMaxAs(e, a) if sumBodyFoldable(e) => maxs += ((e, a)); ()
-      case _ => return None
-    }
-    // an avg is maintainable only from companion columns: resolve each
-    // avg's body to the sum over the SAME expression (whitespace-
-    // normalized); a view averaging something it doesn't sum falls to
-    // the always-sound full recompute
-    def norm(e: String) = e.replaceAll("\\s+", " ").trim.toLowerCase
-    val avgs = avgExprs.map { case (e, a) =>
-      sums.find(s => norm(s._1) == norm(e)) match {
-        case Some((_, sumAlias)) => (e, sumAlias, a)
-        case None => return None
-      }
-    }
-    val aliases = seenGroups ++ countAlias.toSeq ++
-      (sums ++ mins ++ maxs ++ avgExprs).map(_._2)
-    if (countAlias.isEmpty || seenGroups.sorted.toSeq != groups.sorted ||
-      aliases.map(_.toLowerCase).distinct.size != aliases.size) None
-    else Some(AggView(seenGroups.toSeq, countAlias.get,
-      sums.toSeq, mins.toSeq, maxs.toSeq, avgs.toSeq))
-  }
-
-  /** The NULL-sum safety txn entry a create/full materialization should
-    * carry: verifies (one count job over the PINNED source slice) that
-    * no summed expression is NULL anywhere under the view's predicate —
-    * the license for later delta-arithmetic refreshes. Empty map when
-    * the definition is not the aggregate shape. */
-  /** Whether every field is a type whose `sum` folds EXACTLY as ±x
-    * arithmetic: integral (wrap-stable, associative) or decimal
-    * (exact). float/double sums are non-associative — a +x/−x replay
-    * drifts from the full recompute — so they never earn the
-    * incremental license (ADVICE r14). */
-  private[sql] def deltaFoldableTypes(
-      fields: Seq[org.apache.spark.sql.types.StructField]): Boolean = {
-    import org.apache.spark.sql.types._
-    fields.forall(_.dataType match {
-      case _: DecimalType => true
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    })
-  }
-
-  private[sql] def mviewNullsafeTxn(spark: SparkSession, defn: String,
-      src: String, ver: Int): Map[String, Long] =
-    (defn match {
-      case MviewAggSelect(selectList, srcRoot, pred, groupBy) if srcRoot == src =>
-        parseAggView(selectList, groupBy).map { case AggView(_, _, sums, _, _, _) =>
-          if (sums.isEmpty) 1L
-          else try {
-            val w = Option(pred).map(p => s" WHERE $p").getOrElse("")
-            // license only EXACT sum result types (integral/decimal):
-            // float/double ±x folding is non-associative and drifts
-            // from the recompute (schema-only probe, no job)
-            val typed = spark.sql(
-              sums.map { case (e, a) => s"sum($e) AS `$a`" }
-                .mkString("SELECT ", ", ", "") +
-                s" FROM (SELECT * FROM txtable.`$src` VERSION AS OF $ver$w)")
-            if (!deltaFoldableTypes(typed.schema.fields.toSeq)) 0L
-            else {
-              val cond = sums.map { case (e, _) => s"($e) IS NULL" }.mkString(" OR ")
-              val bad = spark.sql(
-                s"SELECT count(*) FROM (SELECT * FROM txtable.`$src` " +
-                  s"VERSION AS OF $ver$w) WHERE $cond").head().getLong(0)
-              if (bad == 0L) 1L else 0L
-            }
-          } catch {
-            // a probe mishap (an expression this parser admitted but
-            // Spark refuses) must degrade the LICENSE, never fail the
-            // CREATE/REFRESH statement it rides (ADVICE r14)
-            case scala.util.control.NonFatal(_) => 0L
-          }
-        }
-      case _ => None
-    }).map(v => Map(MviewNullsafeKey -> v)).getOrElse(Map.empty)
-
-  /** `SELECT <list> FROM <join chain> [WHERE p] GROUP BY <keys>` where
-    * the chain is `txtable.\`r1\` [AS] a1 ([INNER] JOIN txtable.\`ri\`
-    * [AS] ai ON <equi>)+` — the incrementally maintainable N-way
-    * JOIN-aggregate shape (r14 verdict #1 generalized in r15: the
-    * fact⋈dim rollup and the fact⋈dim⋈dim star rollup alike). The FROM
-    * capture is re-split by [[parseJoinChain]], which refuses anything
-    * but an inner equi chain — outer joins full-recompute. */
-  private[sql] val MviewChainAggSelect = ("(?is)^\\s*SELECT\\s+(.+?)\\s+FROM\\s+" +
-    "(txtable\\s*\\.\\s*`[^`]+`\\s+.+?JOIN.+?)" +
-    "(?:\\s+WHERE\\s+(.+?))?\\s+GROUP\\s+BY\\s+(.+?)\\s*;?\\s*$").r
-
-  /** Join-type words that mark a non-inner join (or would shadow an
-    * alias slot) — any of these in the chain refuses the parse. */
-  private val JoinWords =
-    Set("LEFT", "RIGHT", "FULL", "OUTER", "CROSS", "SEMI", "ANTI", "NATURAL")
-
-  /** One source in a FROM join chain: txtable root, alias, and — for
-    * every source after the first — the ON that joins it to the chain
-    * built so far. */
-  private[sql] case class JoinSrc(root: String, alias: String, on: Option[String])
-
-  /** The both-sides-qualified equi conjuncts of an ON condition, as
-    * (qual1, col1, qual2, col2) — the link map the semi-join reduction
-    * in the incremental chain refresh prunes through. Non-conforming
-    * conjuncts are simply skipped (the chain parser has already
-    * validated the condition's overall shape). */
-  private[sql] def onEqConjuncts(on: String): Seq[(String, String, String, String)] = {
-    val cuts = topLevelAll(on, "AND")
-    (0 +: cuts.map(_ + 3)).zip(cuts :+ on.length).flatMap { case (b, e) =>
-      on.substring(b, e).trim match {
-        case OnEq(q1, c1, q2, c2) if q1 != null && q2 != null =>
-          Some((q1, c1, q2, c2))
-        case _ => None
-      }
-    }
-  }
-
-  /** Parse the FROM join chain. Every segment must be `txtable.\`r\`
-    * [AS] alias`, each non-first carrying `ON <equi>` whose top-level
-    * conjuncts each equate a column of THIS alias with a column of an
-    * EARLIER alias (both sides qualified). Outer-join words, non-equi
-    * conditions, alias reuse, and a root appearing twice (self-join —
-    * per-source watermarks key by position against the deduped ref
-    * list) all return None → the always-sound full recompute. */
-  private[sql] def parseJoinChain(from: String): Option[Seq[JoinSrc]] = {
-    val cuts = topLevelAll(from, "JOIN")
-    if (cuts.isEmpty) return None
-    val segs = (0 +: cuts.map(_ + 4)).zip(cuts :+ from.length).map {
-      case (b, e) => from.substring(b, e).trim
-    }
-    // a segment BEFORE a JOIN may end in INNER (stripped); any other
-    // join word there marks an outer join — refuse
-    val JoinWordTail = "(?is)^(.*?)\\s+(\\w+)$".r
-    val parts = segs.zipWithIndex.map { case (s0, i) =>
-      if (i == segs.length - 1) Some(s0)
-      else s0 match {
-        case JoinWordTail(body, w) if w.equalsIgnoreCase("INNER") =>
-          Some(body.trim)
-        case JoinWordTail(_, w) if JoinWords.contains(w.toUpperCase) => None
-        case s => Some(s)
-      }
-    }
-    if (parts.exists(_.isEmpty)) return None
-    val First = "(?is)^txtable\\s*\\.\\s*`([^`]+)`(?:\\s+AS)?\\s+(\\w+)$".r
-    val Later = "(?is)^txtable\\s*\\.\\s*`([^`]+)`(?:\\s+AS)?\\s+(\\w+)\\s+ON\\s+(.+)$".r
-    val chain = scala.collection.mutable.ArrayBuffer.empty[JoinSrc]
-    parts.flatten.zipWithIndex.foreach {
-      case (First(r, a), 0) => chain += JoinSrc(r, a, None); ()
-      case (Later(r, a, on), i) if i > 0 =>
-        chain += JoinSrc(r, a, Some(on.trim)); ()
-      case _ => return None
-    }
-    val aliases = chain.map(_.alias)
-    if (aliases.map(_.toLowerCase).distinct.size != aliases.size ||
-      aliases.exists(a => JoinWords.contains(a.toUpperCase)) ||
-      chain.map(_.root).distinct.size != chain.size) return None
-    chain.zipWithIndex.drop(1).foreach { case (src, i) =>
-      val earlier = chain.take(i).map(_.alias).toSet
-      val on = src.on.get
-      val andCuts = topLevelAll(on, "AND")
-      val conjuncts = (0 +: andCuts.map(_ + 3)).zip(andCuts :+ on.length).map {
-        case (b, e) => on.substring(b, e).trim
-      }
-      val ok = conjuncts.nonEmpty && conjuncts.forall {
-        case OnEq(q1, _, q2, _) =>
-          val qs = Seq(Option(q1), Option(q2)).flatten
-          val others = qs.filterNot(_ == src.alias)
-          qs.size == 2 && others.size == 1 && earlier.contains(others.head)
-        case _ => false
-      }
-      if (!ok) return None
-    }
-    Some(chain.toSeq)
-  }
-
-  /** Parse a join-aggregate view's select list against its GROUP BY:
-    * group select items must be `alias.col [AS name]` (alias from the
-    * chain) matching the GROUP BY list, plus `count(*) AS n` and only
-    * foldable `sum(e) AS a` — and `avg(e) AS a` riding a companion
-    * `sum(e)` (the single-source recipe lifted to the join shape) —
-    * beyond that. Returns (groups as (qualified expr, output name),
-    * countAlias, sums as (expr, alias), avgs as (expr, sum alias,
-    * output alias)). */
-  private[sql] def parseJoinAggView(selectList: String,
-      groupBy: String, aliases: Seq[String])
-      : Option[(Seq[(String, String)], String, Seq[(String, String)],
-        Seq[(String, String, String)])] = {
-    val aliasSet = aliases.toSet
-    val QualGroup = "(?is)^(\\w+)\\s*\\.\\s*(\\w+)(?:\\s+AS\\s+(\\w+))?$".r
-    val groupRefs = splitTopLevel(groupBy).map(_.trim).map {
-      case QualGroup(q, c, null) if aliasSet.contains(q) => s"$q.$c"
-      case _ => return None
-    }
-    var countAlias: Option[String] = None
-    val sums = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val avgExprs = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    val groups = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    splitTopLevel(selectList).map(_.trim).foreach {
-      case QualGroup(q, c, as) if aliasSet.contains(q) &&
-          groupRefs.contains(s"$q.$c") =>
-        groups += ((s"$q.$c", Option(as).getOrElse(c))); ()
-      case MviewCountStar(a) if countAlias.isEmpty => countAlias = Some(a)
-      case MviewAvgAs(e, a) if sumBodyFoldable(e) => avgExprs += ((e, a)); ()
-      case MviewSumAs(e, a) if sumBodyFoldable(e) => sums += ((e, a)); ()
-      case _ => return None
-    }
-    def norm(e: String) = e.replaceAll("\\s+", " ").trim.toLowerCase
-    val avgs = avgExprs.map { case (e, a) =>
-      sums.find(s => norm(s._1) == norm(e)) match {
-        case Some((_, sumAlias)) => (e, sumAlias, a)
-        case None => return None
-      }
-    }
-    val outAliases = groups.map(_._2) ++ countAlias.toSeq ++
-      (sums ++ avgExprs).map(_._2)
-    if (countAlias.isEmpty ||
-      groups.map(_._1).sorted.toSeq != groupRefs.sorted ||
-      outAliases.map(_.toLowerCase).distinct.size != outAliases.size) None
-    else Some((groups.toSeq, countAlias.get, sums.toSeq, avgs.toSeq))
-  }
-
-  /** Per-source watermark txn key for MULTI-source materialized views
-    * (`mview:src:<i>` by position in the definition's reference order);
-    * single-source views keep the plain [[ViewStore.MviewAppId]]. */
-  private[sql] def mviewSrcKey(i: Int): String = s"mview:src:$i"
-
-  /** The PINNED joined frame of a parsed chain — each source read at
-    * its pinned version under its alias, the ON conditions applied in
-    * chain order, the WHERE conjoined NULL-safely. */
-  private[sql] def chainFrame(spark: SparkSession, chain: Seq[JoinSrc],
-      pred: String, frameOf: Int => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit}
-    val joined = chain.zipWithIndex.map { case (src, i) =>
-      (src, frameOf(i).as(src.alias))
-    }.reduceLeft[(JoinSrc, org.apache.spark.sql.DataFrame)] {
-      case ((_, acc), (src, frame)) =>
-        (src, acc.join(frame, expr(src.on.get), "inner"))
-    }._2
-    Option(pred)
-      .map(p => joined.filter(coalesce(expr(p), lit(false))))
-      .getOrElse(joined)
-  }
-
-  /** NULL-sum safety + exact-type license for a JOIN-aggregate view,
-    * verified over the PINNED joined slice (the [[mviewNullsafeTxn]]
-    * contract lifted to N sources). Empty map when the definition is
-    * not the join-aggregate shape. */
-  private[sql] def mviewJoinNullsafeTxn(spark: SparkSession, defn: String,
-      srcs: Seq[String], pins: Map[String, Int]): Map[String, Long] =
-    (defn match {
-      case MviewChainAggSelect(selectList, fromChain, pred, groupBy) =>
-        parseJoinChain(fromChain)
-          .filter(c => c.map(_.root) == srcs)
-          .flatMap(chain =>
-            parseJoinAggView(selectList, groupBy, chain.map(_.alias))
-              .map(v => (chain, v)))
-          .map { case (chain, (_, _, sums, _)) =>
-            if (sums.isEmpty) 1L
-            else try {
-              import org.apache.spark.sql.functions.{expr, sum}
-              val j = chainFrame(spark, chain, pred, i =>
-                graft.tables.TxTable.open(chain(i).root)
-                  .read(spark, Some(pins(chain(i).root))))
-              val typed = j.groupBy()
-                .agg(sum(expr(sums.head._1)).as(sums.head._2),
-                  sums.tail.map { case (e, al) => sum(expr(e)).as(al) }: _*)
-              if (!deltaFoldableTypes(typed.schema.fields.toSeq)) 0L
-              else {
-                val bad = j.filter(
-                  sums.map { case (e, _) => expr(e).isNull }.reduce(_ || _))
-                  .limit(1).count()
-                if (bad == 0L) 1L else 0L
-              }
-            } catch {
-              case scala.util.control.NonFatal(_) => 0L
-            }
-          }
-      case _ => None
-    }).map(v => Map(MviewNullsafeKey -> v)).getOrElse(Map.empty)
-
-  /** The full txn map a materialized view's create/full-recompute commit
-    * carries for the pins it actually read: the single-source watermark
-    * + NULL-sum license, or — for the two-source JOIN-aggregate shape —
-    * per-source watermarks + the join license (any other multi-source
-    * definition records only the full-recompute marker). */
-  private[sql] def mviewCommitTxns(spark: SparkSession, defn: String,
-      srcs: Seq[String], pins: Map[String, Int]): Map[String, Long] = {
-    if (srcs.size == 1)
-      Map(ViewStore.MviewAppId -> pins(srcs.head).toLong) ++
-        mviewNullsafeTxn(spark, defn, srcs.head, pins(srcs.head))
-    else if (srcs.size >= 2)
-      Map(ViewStore.MviewAppId -> 0L) ++
-        srcs.zipWithIndex.map { case (s, i) =>
-          mviewSrcKey(i) -> pins(s).toLong } ++
-        mviewJoinNullsafeTxn(spark, defn, srcs, pins)
-    else Map(ViewStore.MviewAppId -> 0L)
-  }
-
-  /** The per-source watermark txn entries of a create/full-recompute
-    * commit, WITHOUT the NULL-sum license probe (see
-    * [[materializeMviewWithTxns]], which derives the license from the
-    * materialization pass itself). */
-  private def mviewWatermarkTxns(srcs: Seq[String],
-      pins: Map[String, Int]): Map[String, Long] =
-    if (srcs.size == 1) Map(ViewStore.MviewAppId -> pins(srcs.head).toLong)
-    else if (srcs.size >= 2)
-      Map(ViewStore.MviewAppId -> 0L) ++
-        srcs.zipWithIndex.map { case (s, i) => mviewSrcKey(i) -> pins(s).toLong }
-    else Map(ViewStore.MviewAppId -> 0L)
-
-  /** Materialize a view definition at the given pins AND derive its
-    * commit txn map (watermarks + NULL-sum license) from the SAME scan.
-    *
-    * The old shape ran TWO full passes over the pinned slice: one
-    * license probe (`(e) IS NULL` anywhere?) and one materialization.
-    * For the recognized aggregate shapes this fuses them: the pinned
-    * definition text gets per-sum NULL-counter aggregates appended
-    * (`sum(CASE WHEN (e) IS NULL THEN 1 ELSE 0 END)` — extra aggregates
-    * never change the grouping or the other columns), the fused frame
-    * is checkpointed, the license read from the tiny counter columns,
-    * and the counters DROPPED before the write — one source scan plus a
-    * view-sized probe instead of two source scans (opt r15, guide
-    * §2.4). Identical license semantics: group-level counter > 0
-    * anywhere ⇔ some row's summed expression was NULL; exact-type
-    * licensing checks the SAME sum output fields the probe did. Any
-    * mishap in the fused construction degrades the LICENSE (0L — every
-    * later refresh full-recomputes, always sound), never the statement,
-    * exactly the old probe's NonFatal contract. Non-aggregate or
-    * sum-free shapes keep the single plain materialization pass. */
-  private[sql] def materializeMviewWithTxns(spark: SparkSession,
-      defn: String, srcs: Seq[String], pins: Map[String, Int])
-      : (org.apache.spark.sql.DataFrame, Map[String, Long]) = {
-    import org.apache.spark.sql.functions.{col, lit, max, when}
-    val wm = mviewWatermarkTxns(srcs, pins)
-    def plain = spark.sql(ViewStore.expand(ViewStore.pinVersions(defn, pins)))
-    // (selectList, fromTail, pred, groupBy, sums) for the two licensed
-    // aggregate shapes; None for every other definition
-    val aggShape: Option[(String, String, String, String, Seq[(String, String)])] =
-      defn match {
-        case MviewAggSelect(selectList, srcRoot, pred, groupBy)
-            if srcs.size == 1 && srcRoot == srcs.head =>
-          parseAggView(selectList, groupBy).map(v =>
-            (selectList, s"txtable.`$srcRoot`", pred, groupBy, v.sums))
-        case MviewChainAggSelect(selectList, fromChain, pred, groupBy)
-            if srcs.size >= 2 =>
-          parseJoinChain(fromChain)
-            .filter(c => c.map(_.root) == srcs)
-            .flatMap(chain =>
-              parseJoinAggView(selectList, groupBy, chain.map(_.alias))
-                .map { case (_, _, sums, _) =>
-                  (selectList, fromChain, pred, groupBy, sums) })
-        case _ => None
-      }
-    aggShape match {
-      case None => (plain, wm) // no license entry: not an aggregate shape
-      case Some((_, _, _, _, sums)) if sums.isEmpty =>
-        (plain, wm ++ Map(MviewNullsafeKey -> 1L)) // nothing summed: licensed
-      case Some((selectList, fromTail, pred, groupBy, sums)) =>
-        try {
-          val counters = sums.zipWithIndex.map { case ((e, _), i) =>
-            s"sum(CASE WHEN ($e) IS NULL THEN 1 ELSE 0 END) AS `__lic_nc_$i`"
-          }
-          val fusedText = s"SELECT $selectList, ${counters.mkString(", ")} " +
-            s"FROM $fromTail" +
-            Option(pred).map(p => s" WHERE $p").getOrElse("") +
-            s" GROUP BY $groupBy"
-          val fused = spark.sql(
-            ViewStore.expand(ViewStore.pinVersions(fusedText, pins)))
-            .localCheckpoint(eager = true)
-          val sumFields = sums.map { case (_, a) => fused.schema(a) }
-          val lic =
-            if (!deltaFoldableTypes(sumFields)) 0L
-            else {
-              val anyNull = fused.agg(max(when(
-                sums.indices.map(i => col(s"__lic_nc_$i") > 0L)
-                  .reduce(_ || _), lit(1L)).otherwise(lit(0L)))).head()
-              if (!anyNull.isNullAt(0) && anyNull.getLong(0) == 1L) 0L else 1L
-            }
-          val df = fused.drop(sums.indices.map(i => s"__lic_nc_$i"): _*)
-          (df, wm ++ Map(MviewNullsafeKey -> lic))
-        } catch {
-          // a fused-construction mishap degrades the LICENSE, never the
-          // CREATE/REFRESH statement it rides (the old probe's contract)
-          case scala.util.control.NonFatal(_) =>
-            (plain, wm ++ Map(MviewNullsafeKey -> 0L))
-        }
-    }
-  }
-
-  /** MERGE a signed GROUP-BY delta frame (`__dn` + `__d_<alias>`
-    * columns alongside the group keys) into the materialization on the
-    * composite group key: net-count-0 groups DELETE, touched groups
-    * update arithmetically (plain addition — the license guarantees
-    * non-NULL operands; the decimal-overflow fault witness rides the
-    * refresh paths' fused control probe, opt r16), net-new groups
-    * INSERT; `txns` (the watermarks) ride the SAME commit. */
-  private[sql] def mergeGroupDelta(spark: SparkSession,
-      t: graft.tables.TxTable, delta: org.apache.spark.sql.DataFrame,
-      groups: Seq[String], countAlias: String, sumAliases: Seq[String],
-      txns: Map[String, Long], minAliases: Seq[String] = Nil,
-      maxAliases: Seq[String] = Nil,
-      avgAliases: Seq[(String, String)] = Nil): Unit = {
-    import graft.tables.TxTable.{MergeDelete, MergeInsert, MergeUpdate}
-    // min/max sets only arrive on INSERT-ONLY deltas (the monotone
-    // fold: least/greatest against the delta's own extrema — both skip
-    // NULL operands, so an all-NULL delta extremum keeps the stored
-    // value and a NULL stored value adopts the delta's, exactly the
-    // min()-ignores-NULLs recompute semantics); deltas carrying deletes
-    // take the touched-group recheck instead (r14 verdict #2).
-    // avgs ((sumAlias, avgAlias) pairs) re-derive from the maintained
-    // sum and count with Spark's own divide-then-cast shape: the stored
-    // sum column has exactly Average's buffer type, so CAST(newSum /
-    // newCount AS <declared avg type>) is the identical computation a
-    // recompute would run — deletes included (an avg is a RATIO of
-    // maintained columns, so unlike min/max a delete never strands it)
-    val schema = if (avgAliases.isEmpty) null else t.read(spark).schema
-    def typOf(a: String) = schema(a).dataType.sql
-    val avgUpd = avgAliases.map { case (s, a) =>
-      a -> (s"CAST((t.`$s` + s.`__d_$s`) / (t.`$countAlias` + s.`__dn`) " +
-        s"AS ${typOf(a)})")
-    }
-    val avgIns = avgAliases.map { case (s, a) =>
-      s"CAST(CAST(s.`__d_$s` AS ${typOf(s)}) / s.`__dn` AS ${typOf(a)})"
-    }
-    val matched = Seq(
-      MergeDelete(Some(s"t.`$countAlias` + s.`__dn` = 0")),
-      MergeUpdate(None, Some(
-        (countAlias -> s"t.`$countAlias` + s.`__dn`") +:
-          (sumAliases.map(a => a -> s"t.`$a` + s.`__d_$a`") ++
-            minAliases.map(a => a -> s"least(t.`$a`, s.`__mn_$a`)") ++
-            maxAliases.map(a => a -> s"greatest(t.`$a`, s.`__mx_$a`)") ++
-            avgUpd))))
-    val insCols = groups ++ Seq(countAlias) ++ sumAliases ++
-      minAliases ++ maxAliases ++ avgAliases.map(_._2)
-    val insVals = groups.map(g => s"s.`$g`") ++
-      Seq("s.`__dn`") ++ sumAliases.map(a => s"s.`__d_$a`") ++
-      minAliases.map(a => s"s.`__mn_$a`") ++ maxAliases.map(a => s"s.`__mx_$a`") ++
-      avgIns
-    val notMatched = Seq(MergeInsert(Some("s.`__dn` > 0"),
-      Some(insCols), Some(insVals)))
-    // delta is a groupBy output keyed on the merge key: key-distinct by
-    // construction, so the duplicate-source-match probe job is skipped
-    t.mergeWhen(spark, delta, groups, matched, notMatched, Nil, txns,
-      sourceKeyDistinct = true)
-    ()
-  }
 
   /** The self-equi-key COMPONENTS a MERGE ON condition names —
     * `t.k = s.k` → Seq(k), `t.a = s.a AND t.b = s.b` → Seq(a, b) — or a
@@ -1729,625 +1187,49 @@ case class TxDropViewCommand(root: String, ifExists: Boolean)
 }
 
 /** `CREATE MATERIALIZED VIEW txtable.\`root\`
-  * [TBLPROPERTIES('statCols'='…')] AS <query>` — the definition is
-  * stored, the query's result materialized into an ordinary TxTable at
-  * `root` (stats/bloom pass, constraints — it prunes like any table),
-  * and the applied-through version of the query's single TxTable source
-  * rides the SAME commit as the rows ([[ViewStore.MviewAppId]] txn
-  * watermark). Source references are PINNED (`VERSION AS OF`) to the
-  * recorded watermark, so a racing source commit lands in the next
-  * refresh, never lost or doubled. */
+  * [TBLPROPERTIES('statCols'='…')] AS <query>` → [[Mview.create]]: the
+  * definition is stored, the query's result materialized into an
+  * ordinary TxTable at `root` (stats/bloom pass, constraints — it prunes
+  * like any table), and the applied-through versions of the query's
+  * TxTable sources ride the SAME commit as the rows (txn watermarks, one
+  * per source). Source references are PINNED (`VERSION AS OF`) to the
+  * recorded watermarks, so a racing source commit lands in the next
+  * refresh, never lost or doubled. Aggregate views also record the
+  * NULL-sum license their delta refreshes need, derived from the same
+  * scan. Returns the applied-through version and the row count. */
 case class TxCreateMviewCommand(root: String, defnSql: String,
     statCols: Seq[String], bloomCols: Seq[String])
     extends LeafRunnableCommand {
   import GraftSqlParser.attr
   override val output: Seq[Attribute] = Seq(
     attr("source_version", IntegerType), attr("rows", LongType))
-  override def run(spark: SparkSession): Seq[Row] = {
-    // pre-checks BEFORE any work; registration only AFTER the
-    // materialization succeeds — a definition Spark refuses must not
-    // leave a half-created view whose path refuses retries (ADVICE r14)
-    ViewStore.requireMviewCreatable(root)
-    val srcs = ViewStore.txtableRefs(defnSql).filter(TxTable.exists)
-    val pins = srcs.map(s => s -> TxTable.open(s).currentVersion).toMap
-    val t = new TxTable(root, statCols, bloomCols)
-    val wm =
-      try {
-        // single-source views track the source version under MviewAppId;
-        // the two-source JOIN-aggregate shape tracks BOTH pins under
-        // per-source keys (r14 verdict #1); any other multi-source
-        // definition refreshes by full recompute and keeps watermark 0.
-        // Aggregate shapes also verify the NULL-sum/type license for
-        // delta-arithmetic refreshes — derived from the SAME scan that
-        // materializes the view ([[GraftSqlParser.materializeMviewWithTxns]])
-        // and committed with the rows.
-        val (df, txns) =
-          GraftSqlParser.materializeMviewWithTxns(spark, defnSql, srcs, pins)
-        t.overwriteTagged(spark, df, txns)
-        txns(ViewStore.MviewAppId)
-      } catch {
-        case e: Throwable =>
-          // un-create the table artifacts this attempt staged (the
-          // pre-check proved the path held nothing) so a corrected
-          // CREATE retry is not refused
-          GraftSqlParser.deleteRecursively(java.nio.file.Paths.get(root, "_txlog"))
-          GraftSqlParser.deleteRecursively(java.nio.file.Paths.get(root, "data"))
-          throw e
-      }
-    ViewStore.registerMview(root, defnSql)
-    Seq(Row(wm.toInt, t.snapshot().files.map(_.rows).sum))
-  }
+  override def run(spark: SparkSession): Seq[Row] =
+    Mview.create(spark, root, defnSql, statCols, bloomCols)
 }
 
-/** `REFRESH MATERIALIZED VIEW txtable.\`root\`` — CDF-INCREMENTAL
-  * maintenance where the definition allows it: for a single-source
-  * select/project view (`SELECT <list> FROM txtable.\`src\` [WHERE …]`,
-  * no aggregate/join/distinct) whose output carries the materialized
-  * table's lead stat column, the refresh replays the SOURCE's row-level
-  * change feed for exactly (lastApplied, current] — cost proportional
-  * to the CHANGED files, never either table — filters/projects the
-  * change rows through the view's own predicate and select list, and
-  * folds them in via the exactly-once CDC apply (one commit: rows +
-  * watermark; an UPDATE whose new image leaves the view's WHERE band
-  * nets to a pure delete, and vice versa). Any other shape — or a
-  * vacuumed-away change range — falls back to a FULL recompute pinned
-  * at the current source version; the returned `mode` column says
-  * which path ran. A replayed/idle refresh is a recognized no-op. */
+/** `REFRESH MATERIALIZED VIEW txtable.\`root\`` → [[Mview.refresh]]:
+  * brings the view up to its sources' current versions by the cheapest
+  * sound path, named in the `mode` column:
+  *  - `incremental` for a single-source select/project view: the
+  *    source's row-level change feed since the watermark, filtered and
+  *    projected by the view, folded in by the exactly-once CDC apply;
+  *  - `incremental` for a `GROUP BY` view over one txtable source or an
+  *    inner equi-join chain of them (count(*), sum, avg beside its sum,
+  *    and min/max over one source): signed per-group deltas of the
+  *    changed sources MERGEd into the rows;
+  *  - `incremental-recheck` when a delete under min/max re-aggregates
+  *    the touched groups;
+  *  - `noop` when there is nothing to apply (the watermark still
+  *    advances past changes outside the view);
+  *  - `full` for every other shape and every obstacle (missing license,
+  *    NULLs or overflow in a delta, vacuumed change range): a recompute
+  *    pinned at the current source versions.
+  * `source_version` is the applied-through version after the refresh. */
 case class TxRefreshMviewCommand(root: String) extends LeafRunnableCommand {
   import GraftSqlParser.attr
   override val output: Seq[Attribute] = Seq(
     attr("mode", StringType), attr("source_version", IntegerType))
-
-  private val SimpleSelect = ("(?is)^\\s*SELECT\\s+(.+?)\\s+FROM\\s+" +
-    "txtable\\s*\\.\\s*`([^`]+)`(?:\\s+WHERE\\s+(.+?))?\\s*;?\\s*$").r
-  // anything that breaks per-row maintenance (aggregation, windows, set
-  // ops, joins) blocks the incremental path; a false positive (e.g. a
-  // column literally named "max") just takes the always-sound full
-  // recompute, reported in the `mode` column — never a silent wrong
-  // structural keywords block per-row maintenance as bare WORDS;
-  // aggregate names block only as CALLS (`max(`) — a COLUMN named `max`
-  // is just a column, and forcing it to full recompute was the round-13
-  // watch item (sound but wasteful)
-  private val Blockers =
-    Seq("GROUP", "JOIN", "DISTINCT", "UNION", "ORDER", "LIMIT", "HAVING",
-      "OVER", "EXCEPT", "INTERSECT")
-  private val AggBlockers = Seq("COUNT", "SUM", "MIN", "MAX", "AVG")
-
-  private def topLevelCall(s: String, kw: String): Boolean =
-    GraftSqlParser.topLevelCall(s, kw)
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit}
-    val defn = ViewStore.mviewDefinition(root).getOrElse(
-      throw new IllegalArgumentException(s"no materialized view at txtable.`$root`"))
-    val t = TxTable.open(root)
-    val last = t.snapshot().txns.getOrElse(ViewStore.MviewAppId, 0L).toInt
-    val srcs = ViewStore.txtableRefs(defn).filter(TxTable.exists)
-    // the watermark is the version the recompute ACTUALLY pinned — a
-    // source commit racing between an earlier currentVersion read and
-    // the pin read here is materialized AND covered, so the next
-    // incremental refresh never replays it (ADVICE r13)
-    def full(): Seq[Row] = {
-      val pins = srcs.map(s => s -> TxTable.open(s).currentVersion).toMap
-      // re-establish (or revoke) watermark(s) + the NULL-sum safety
-      // license against the slice(s) actually pinned — license derived
-      // from the materialization scan itself, not a second source pass
-      val (df, txns) =
-        GraftSqlParser.materializeMviewWithTxns(spark, defn, srcs, pins)
-      t.overwriteTagged(spark, df, txns)
-      val wm = if (srcs.size >= 2)
-        txns(GraftSqlParser.mviewSrcKey(0)) else txns(ViewStore.MviewAppId)
-      Seq(Row("full", wm.toInt))
-    }
-    if (srcs.size >= 2)
-      return incrementalJoin(spark, t, defn, srcs).getOrElse(full())
-    if (srcs.size != 1) return full()
-    val src = TxTable.open(srcs.head)
-    val srcV = src.currentVersion
-    if (srcV <= last) return Seq(Row("noop", last))
-    val incremental: Option[Seq[Row]] = defn match {
-      case SimpleSelect(selectList, srcRoot, pred)
-          if srcRoot == srcs.head && last > 0 &&
-            !Blockers.exists(b => GraftSqlParser.topLevelKeyword(defn, b) >= 0) &&
-            !AggBlockers.exists(topLevelCall(defn, _)) &&
-            t.statCols.nonEmpty =>
-        val key = t.statCols.head
-        try {
-          val ch = src.rowChangesBetween(spark, last, srcV)
-          val filtered = Option(pred)
-            .map(p => ch.filter(coalesce(expr(p), lit(false))))
-            .getOrElse(ch)
-          val projected =
-            if (selectList.trim == "*") filtered
-            else filtered.selectExpr(GraftSqlParser.splitTopLevel(selectList) ++
-              Seq("_change_type", "_commit_version"): _*)
-          if (!projected.columns.contains(key)) None
-          else {
-            t.applyChangeRows(spark, projected, ViewStore.MviewAppId,
-              srcV.toLong, key)
-            Some(Seq(Row("incremental", srcV)))
-          }
-        } catch {
-          // a vacuumed-away range (or an unexpected shape) degrades to
-          // the always-sound full recompute, reported as such
-          case scala.util.control.NonFatal(_) => None
-        }
-      // GROUP-BY aggregate views (round-13 verdict #2): the classic
-      // delta rule — fold the CDC feed as insert → +1/+x, delete →
-      // −1/−x per group, MERGE the group deltas into the
-      // materialization (composite-key mergeWhen: DELETE at net count
-      // 0, arithmetic UPDATE, conditional INSERT — watermark in the
-      // SAME commit), avg via the sum/count recipe. Sum maintenance is
-      // licensed by the NULL-safety flag the create/full paths verify;
-      // a NULL group key or summed value ARRIVING in the delta (or any
-      // unexpected failure) degrades to the full recompute, loudly.
-      case GraftSqlParser.MviewAggSelect(selectList, srcRoot, pred, groupBy)
-          if srcRoot == srcs.head && last > 0 =>
-        GraftSqlParser.parseAggView(selectList, groupBy).flatMap {
-          case GraftSqlParser.AggView(groups, countAlias, sums, mins, maxs,
-              avgs) =>
-            val nullsafe = sums.isEmpty ||
-              t.snapshot().txns.get(GraftSqlParser.MviewNullsafeKey).contains(1L)
-            if (!nullsafe) None
-            else try {
-              val ch = src.rowChangesBetween(spark, last, srcV)
-              val filtered = Option(pred)
-                .map(p => ch.filter(coalesce(expr(p), lit(false))))
-                .getOrElse(ch)
-              import org.apache.spark.sql.functions.{col, max, min, sum, when}
-              // ONE pass over the change feed computes the signed group
-              // deltas AND every safety witness the old path spent a
-              // separate full-CDC-read job each on: per-sum NULL
-              // counters (`__nc_` — sum() skips NULLs, so row-level
-              // NULLs are invisible post-agg without them), the
-              // delete-presence flag (`__del`), and the delta extrema.
-              // Every later check runs against the PERSISTED,
-              // group-count-sized delta — the CDC slice is read once
-              // (opt r15; guide §2.4: do fewer passes, probe the small
-              // frame not the big one).
-              val sign = when(expr("_change_type = 'insert'"), lit(1L))
-                .otherwise(lit(-1L))
-              val aggCols = (sum(sign).as("__dn") +:
-                sums.map { case (e, a) => sum(expr(e) * sign).as(s"__d_$a") }) ++
-                sums.map { case (e, a) =>
-                  sum(when(expr(e).isNull, lit(1L)).otherwise(lit(0L)))
-                    .as(s"__nc_$a") } ++
-                mins.map { case (e, a) => min(expr(e)).as(s"__mn_$a") } ++
-                maxs.map { case (e, a) => max(expr(e)).as(s"__mx_$a") } :+
-                max(when(col("_change_type") === "delete", lit(1L))
-                  .otherwise(lit(0L))).as("__del")
-              // EAGER localCheckpoint, not persist: a persisted frame
-              // still re-ANALYZES its full lineage (CDC union → filter →
-              // agg) on every downstream action — measured as ~60% of
-              // refresh wall time spent between jobs on the driver. The
-              // checkpoint truncates the plan to a scan of the group-
-              // count-sized delta; the per-query unpersist sweep in
-              // Bench/Verify reclaims the blocks (opt r15, guide §3.3)
-              val delta0 = filtered
-                .groupBy(groups.map(org.apache.spark.sql.functions.col): _*)
-                .agg(aggCols.head, aggCols.tail: _*)
-                .localCheckpoint(eager = true)
-              try {
-                // a NULL group key surfaces as a NULL-keyed delta row;
-                // a NULL summed value as a positive `__nc_` counter —
-                // the same triggers the old per-row probe fired on.
-                // ONE aggregate action over the checkpointed delta
-                // answers every control probe (unsafe? any delete?
-                // empty? would a decimal sum overflow?) — three separate
-                // limit/count actions were three scheduling+planning
-                // round-trips (opt r15), and the decimal-overflow probe
-                // was a fourth separate action (opt r16): when a decimal
-                // sum exists, the delta left-joins the group-count-sized
-                // materialization and the overflow witness ((t.a + Δa)
-                // IS NULL on non-NULL operands) aggregates in the SAME
-                // pass. The view's group keys are unique by construction
-                // (a groupBy output maintained by keyed MERGE), so the
-                // left join preserves the delta's row count and every
-                // max() witness is duplicate-blind anyway.
-                import org.apache.spark.sql.functions.count
-                val hasDecimalSum = sums.nonEmpty &&
-                  delta0.schema.fields.filter(_.name.startsWith("__d_"))
-                    .exists(_.dataType
-                      .isInstanceOf[org.apache.spark.sql.types.DecimalType])
-                val sd = delta0.as("s")
-                val probeSrc =
-                  if (!hasDecimalSum) sd
-                  else sd.join(t.read(spark).as("t"),
-                    groups.map(g => col(s"s.`$g`") <=> col(s"t.`$g`"))
-                      .reduce(_ && _), "left")
-                val unsafeCols = groups.map(g => col(s"s.`$g`").isNull) ++
-                  sums.map { case (_, a) => col(s"s.`__nc_$a`") > 0L }
-                val ovfWitness =
-                  if (!hasDecimalSum) lit(false)
-                  else sums.map { case (_, a) =>
-                    col(s"t.`$a`").isNotNull &&
-                      col(s"s.`__d_$a`").isNotNull &&
-                      (col(s"t.`$a`") + col(s"s.`__d_$a`")).isNull
-                  }.reduce(_ || _)
-                val probe = probeSrc.agg(
-                  count(lit(1)).as("__n"),
-                  max(when(unsafeCols.reduce(_ || _), lit(1L))
-                    .otherwise(lit(0L))).as("__u"),
-                  max(col("s.`__del`")).as("__dl"),
-                  max(when(ovfWitness, lit(1L)).otherwise(lit(0L)))
-                    .as("__ov")).head()
-                val nGroups = probe.getLong(0)
-                val anyUnsafe = !probe.isNullAt(1) && probe.getLong(1) == 1L
-                val anyDelete = !probe.isNullAt(2) && probe.getLong(2) == 1L
-                val anyOverflow = !probe.isNullAt(3) && probe.getLong(3) == 1L
-                if (anyUnsafe) None
-                // a delete can evict the current extremum — min/max
-                // views recheck exactly the groups the delta names,
-                // cost ∝ touched groups, never the view (r14 verdict #2)
-                else if ((mins.nonEmpty || maxs.nonEmpty) && anyDelete) {
-                  // delta0's group keys ARE the distinct touched groups
-                  recheckTouchedGroups(spark, t, srcs.head, srcV, delta0,
-                    groups, countAlias, sums, mins, maxs, pred, avgs)
-                } else {
-                  // the delta's own sum types must be exactly foldable
-                  // too (a widening evolution could drift them past the
-                  // licensed create-time types) — schema-only, no job
-                  val dFields = delta0.schema.fields.filter(_.name.startsWith("__d_"))
-                  if (!GraftSqlParser.deltaFoldableTypes(dFields.toSeq)) None
-                  else if (nGroups == 0L) {
-                    // all source changes fell outside the view — commit
-                    // the watermark txn-only or every later refresh
-                    // re-reads this same change range forever (ADVICE r14)
-                    t.commitTxns(Map(ViewStore.MviewAppId -> srcV.toLong),
-                      "mview-watermark")
-                    Some(Seq(Row("noop", srcV)))
-                  } else {
-                    val delta = delta0.drop(
-                      sums.map { case (_, a) => s"__nc_$a" } :+ "__del": _*)
-                    if (anyOverflow) {
-                      // decimal sums can overflow to NULL under non-ANSI
-                      // arithmetic; under the nullsafe license that is a
-                      // FAULT — full-recompute instead of papering over
-                      // it (ADVICE r14; the witness now rides the fused
-                      // control probe above instead of its own action)
-                      None
-                    } else {
-                      // plain addition, NO coalesce: under the license
-                      // t.sum and s.__d are provably non-NULL, and a NULL
-                      // arithmetic result is a fault the overflow probe
-                      // catches — silently keeping the stale value was
-                      // the bug (ADVICE r14)
-                      GraftSqlParser.mergeGroupDelta(spark, t, delta, groups,
-                        countAlias, sums.map(_._2),
-                        Map(ViewStore.MviewAppId -> srcV.toLong),
-                        mins.map(_._2), maxs.map(_._2),
-                        avgs.map { case (_, s, a) => (s, a) })
-                      Some(Seq(Row("incremental", srcV)))
-                    }
-                  }
-                }
-              } finally { delta0.unpersist(blocking = false); () }
-            } catch {
-              case scala.util.control.NonFatal(_) => None
-            }
-        }
-      case _ => None
-    }
-    incremental.getOrElse(full())
-  }
-
-  /** TOUCHED-GROUP RECHECK (r14 verdict #2): a delete can evict a
-    * group's current min/max, which no ±x arithmetic can repair — but
-    * only for the groups the delta NAMES. Re-aggregate exactly those
-    * groups from the pinned source (per-column IN-lists push down and
-    * fold to manifest [min,max] bands, so a group-banded layout scans
-    * only the touched files; the exact tuple membership rides the
-    * left-join below) and MERGE: a recomputed group updates to its
-    * exact values, a vanished group deletes, a group born in this very
-    * delta inserts. Cost ∝ touched groups — never the view, never the
-    * source. Over ~10k touched tuples the IN-list (and the driver-side
-    * tuple set) stops being cheap: full recompute. */
-  private def recheckTouchedGroups(spark: SparkSession, t: TxTable,
-      srcRoot: String, srcV: Int,
-      // the PERSISTED group-delta frame — one row per touched group (a
-      // groupBy output), so its key projection needs no distinct pass
-      groupDelta: org.apache.spark.sql.DataFrame, groups: Seq[String],
-      countAlias: String, sums: Seq[(String, String)],
-      mins: Seq[(String, String)], maxs: Seq[(String, String)],
-      pred: String,
-      avgs: Seq[(String, String, String)] = Nil): Option[Seq[Row]] = {
-    import org.apache.spark.sql.functions.{avg, coalesce, col, count, expr,
-      lit, max, min, sum}
-    import graft.tables.TxTable.{MergeDelete, MergeInsert, MergeUpdate}
-    val touched = groupDelta.select(groups.map(col): _*)
-      .limit(10001).collect()
-    if (touched.length > 10000) return None
-    // EXACT semi-join file pruning (opt r16, extending the r15 chain-
-    // refresh readIn discipline): the SQL-path source read only folds an
-    // IN-list to a [min,max] envelope band, which prunes nothing when
-    // the touched keys straddle the domain (the gate's {0..2, 9000001}
-    // delete+insert shape spans every file's range). readIn tests each
-    // file's [min,max] against the MEMBER SET by binary search — exact
-    // per-file membership, cost ∝ touched files — and already applies
-    // that column's isin residual. Non-integral first keys keep the SQL
-    // read (envelope bands at best, residual filters keep it exact).
-    val exactPruned: Option[org.apache.spark.sql.DataFrame] =
-      groups.zipWithIndex.collectFirst {
-        case (g, i) if {
-          val dt = groupDelta.schema(g).dataType
-          dt == org.apache.spark.sql.types.LongType ||
-            dt == org.apache.spark.sql.types.IntegerType
-        } =>
-          val vs = touched.map(r => r.get(i)).filter(_ != null)
-            .map { case n: Number => n.longValue }.distinct.toSeq
-          (TxTable.open(srcRoot).readIn(spark, g, vs, Some(srcV)).df, g)
-      }.map(_._1)
-    val base = exactPruned.getOrElse(
-      spark.sql(s"SELECT * FROM txtable.`$srcRoot` VERSION AS OF $srcV"))
-    val withPred = Option(pred)
-      .map(p => base.filter(coalesce(expr(p), lit(false)))).getOrElse(base)
-    val inCols = groups.zipWithIndex.map { case (g, i) =>
-      col(g).isin(touched.map(_.get(i)).distinct.toSeq: _*)
-    }
-    val aggCols = (count(lit(1)).as(countAlias) +:
-      sums.map { case (e, a) => sum(expr(e)).as(a) }) ++
-      mins.map { case (e, a) => min(expr(e)).as(a) } ++
-      maxs.map { case (e, a) => max(expr(e)).as(a) } ++
-      avgs.map { case (e, _, a) => avg(expr(e)).as(a) }
-    val recomputed = withPred.filter(inCols.reduce(_ && _))
-      .groupBy(groups.map(col): _*)
-      .agg(aggCols.head, aggCols.tail: _*)
-    val touchedDf = spark.createDataFrame(
-      java.util.Arrays.asList(touched: _*),
-      org.apache.spark.sql.types.StructType(
-        groups.map(g => groupDelta.schema(g))))
-    // NULL countAlias after the left join ⇔ the touched group vanished
-    val mergeSource = touchedDf.join(recomputed, groups, "left")
-    val aggAliases = Seq(countAlias) ++ (sums ++ mins ++ maxs).map(_._2) ++
-      avgs.map(_._3)
-    val matched = Seq(
-      MergeDelete(Some(s"s.`$countAlias` IS NULL")),
-      MergeUpdate(None, Some(aggAliases.map(a => a -> s"s.`$a`"))))
-    val notMatched = Seq(MergeInsert(Some(s"s.`$countAlias` IS NOT NULL"),
-      Some(groups ++ aggAliases),
-      Some((groups ++ aggAliases).map(a => s"s.`$a`"))))
-    // touchedDf is a collected DISTINCT key set left-joined to a groupBy
-    // output on the same key: key-distinct by construction
-    t.mergeWhen(spark, mergeSource, groups, matched, notMatched, Nil,
-      Map(ViewStore.MviewAppId -> srcV.toLong), sourceKeyDistinct = true)
-    Some(Seq(Row("incremental-recheck", srcV)))
-  }
-
-  /** The N-source JOIN-aggregate incremental path (r14 verdict #1,
-    * generalized to join CHAINS in r15) — the classic delta-join rule,
-    * telescoped: ΔJ = Σᵢ A₁@last ⋈ … ⋈ Aᵢ₋₁@last ⋈ ΔAᵢ ⋈ Aᵢ₊₁@cur ⋈ …
-    * ⋈ Aₙ@cur (signs ride the delta source; every cross-delta overlap
-    * term lands in exactly one summand because the LATER sources are
-    * read at CUR — the telescoping that keeps N terms exact for N
-    * deltas). Idle sources contribute no term; each term joins a
-    * changed-files-sized delta against pinned snapshots, the signed
-    * group deltas fold as ±1/±x and MERGE on the composite group key
-    * with ALL advanced watermarks in the same commit. Any obstacle —
-    * unparseable shape, outer join, self-join, missing/revoked license,
-    * NULL group key or summed value in a delta, non-foldable sum type,
-    * decimal overflow, vacuumed change range, restored (rewound)
-    * source — returns None → the always-sound full recompute, reported
-    * in `mode`. */
-  private def incrementalJoin(spark: SparkSession, t: TxTable,
-      defn: String, srcs: Seq[String]): Option[Seq[Row]] = {
-    import org.apache.spark.sql.functions.{col, expr, lit, sum, when}
-    defn match {
-      case GraftSqlParser.MviewChainAggSelect(selectList, fromChain, pred,
-          groupBy) =>
-        GraftSqlParser.parseJoinChain(fromChain)
-          .filter(c => c.map(_.root) == srcs)
-          .flatMap(chain =>
-            GraftSqlParser.parseJoinAggView(selectList, groupBy,
-              chain.map(_.alias)).map(v => (chain, v)))
-          .flatMap { case (chain, (groups, countAlias, sums, avgs)) =>
-            val txns = t.snapshot().txns
-            val n = chain.size
-            val last = (0 until n).map(i =>
-              txns.getOrElse(GraftSqlParser.mviewSrcKey(i), 0L).toInt)
-            val nullsafe = sums.isEmpty ||
-              txns.get(GraftSqlParser.MviewNullsafeKey).contains(1L)
-            if (last.exists(_ <= 0) || !nullsafe) None
-            else {
-              val tabs = chain.map(c => TxTable.open(c.root))
-              val cur = tabs.map(_.currentVersion)
-              if ((0 until n).exists(i => cur(i) < last(i))) None // rewound
-              else if ((0 until n).forall(i => cur(i) == last(i)))
-                Some(Seq(Row("noop", last.head)))
-              else try {
-                val groupAliases = groups.map(_._2)
-                val sumAliases = sums.map(_._2)
-                val projCols = groups.map { case (g, a) => expr(g).as(a) } ++
-                  sums.map { case (e, a) => expr(e).as(s"__v_$a") }
-                // direct equi links between chain members, as
-                // (deltaIdx, otherIdx) -> (deltaCol, otherCol): a pinned
-                // source joining a delta only matches rows whose link-
-                // key value appears in the delta, so its scan can be
-                // SEMI-JOIN REDUCED — manifest-pruned to the files whose
-                // stats admit one of the delta's (≤10k, integral) key
-                // values. Cost ∝ touched files, not the source.
-                val aliasIdx = chain.map(_.alias).zipWithIndex.toMap
-                val links = scala.collection.mutable.Map.empty[(Int, Int), (String, String)]
-                chain.zipWithIndex.drop(1).foreach { case (src, k) =>
-                  GraftSqlParser.onEqConjuncts(src.on.get).foreach {
-                    case (qa, ca, qb, cb) =>
-                      for (ia <- aliasIdx.get(qa); ib <- aliasIdx.get(qb)) {
-                        if (!links.contains((ia, ib))) links((ia, ib)) = (ca, cb)
-                        if (!links.contains((ib, ia))) links((ib, ia)) = (cb, ca)
-                      }
-                  }
-                }
-                // each changed source's CDC slice is consumed by the
-                // key-collect probe AND by its delta term — build and
-                // PERSIST it once instead of re-reading the change
-                // range per consumer (opt r15, guide §2.4)
-                val cdcCache = scala.collection.mutable.Map
-                  .empty[Int, org.apache.spark.sql.DataFrame]
-                def cdc(i: Int): org.apache.spark.sql.DataFrame =
-                  cdcCache.getOrElseUpdate(i,
-                    tabs(i).rowChangesBetween(spark, last(i), cur(i)).persist())
-                val changed = (0 until n).filter(i => cur(i) > last(i))
-                // every link-key probe the delta terms will need,
-                // collected in ONE action (opt r16; they were one
-                // distinct+collect round-trip per (delta, link) pair):
-                // each branch keeps its own per-key distinct + 10001
-                // limit, the branches union, and the single collect is
-                // split driver-side. A branch that hits the limit loses
-                // its pruning (None → full pinned read), same as before.
-                val needed: Seq[(Int, String)] = changed.flatMap { i =>
-                  (0 until n).filter(_ != i).flatMap(j =>
-                    links.get((i, j)).map { case (dc, _) => (i, dc) })
-                }.distinct.filter { case (i, c) =>
-                  cdc(i).schema.fields.find(_.name == c).exists(f =>
-                    f.dataType == org.apache.spark.sql.types.LongType ||
-                      f.dataType == org.apache.spark.sql.types.IntegerType)
-                }
-                val keySets: Map[(Int, String), Option[Seq[Long]]] =
-                  if (needed.isEmpty) Map.empty
-                  else {
-                    val branches = needed.map { case (i, c) =>
-                      val keys = cdc(i).select(lit(i).as("__i"), lit(c).as("__c"),
-                          col(c).cast("long").as("__v"))
-                        .na.drop(Seq("__v"))
-                      // a slice the MANIFEST proves small (zero jobs to
-                      // know) dedups in one task — coalesce(1) makes the
-                      // distinct exchange-free (SinglePartition satisfies
-                      // the grouping requirement), so the whole batched
-                      // probe runs as ONE job with no AQE stage
-                      // round-trips; bigger slices keep the distributed
-                      // distinct (opt r16, guide §5 — the bound is
-                      // data-derived, not a core-count constant)
-                      val small = tabs(i).changeRowsUpperBound(
-                        last(i), cur(i)) <= 262144L
-                      (if (small) keys.coalesce(1) else keys)
-                        .distinct().limit(10001)
-                    }
-                    val rows = branches.reduce(_ unionAll _).collect()
-                    val grouped = rows.groupBy(r => (r.getInt(0), r.getString(1)))
-                    needed.map { k =>
-                      val vs = grouped.getOrElse(k, Array.empty[org.apache.spark.sql.Row])
-                        .map(_.getLong(2)).toSeq
-                      k -> (if (vs.size > 10000) None else Some(vs))
-                    }.toMap
-                  }
-                def deltaKeys(i: Int, c: String): Option[Seq[Long]] =
-                  keySets.getOrElse((i, c), None)
-                def term(i: Int): org.apache.spark.sql.DataFrame = {
-                  val sign = when(
-                    col(s"${chain(i).alias}._change_type") === "insert",
-                    lit(1L)).otherwise(lit(-1L))
-                  val j = GraftSqlParser.chainFrame(spark, chain, pred, j =>
-                    if (j == i) cdc(j)
-                    else {
-                      val ver = if (j < i) last(j) else cur(j)
-                      links.get((i, j))
-                        .flatMap { case (dc, oc) =>
-                          deltaKeys(i, dc).map(vs =>
-                            tabs(j).readIn(spark, oc, vs, Some(ver)).df)
-                        }
-                        .getOrElse(tabs(j).read(spark, Some(ver)))
-                    })
-                  j.select(projCols :+ sign.as("__sign"): _*)
-                }
-                try {
-                  val joined = changed.map(term).reduce(_ unionByName _)
-                  // ONE pass over the delta-join union computes the
-                  // signed group deltas AND the per-sum NULL counters;
-                  // the safety/emptiness/overflow checks then probe the
-                  // PERSISTED group-count-sized delta instead of
-                  // re-running the delta joins per check (opt r15)
-                  val aggCols = sum(col("__sign")).as("__dn") +:
-                    (sumAliases.map(a =>
-                      sum(col(s"__v_$a") * col("__sign")).as(s"__d_$a")) ++
-                      sumAliases.map(a =>
-                        sum(when(col(s"__v_$a").isNull, lit(1L))
-                          .otherwise(lit(0L))).as(s"__nc_$a")))
-                  // EAGER localCheckpoint, not persist: the delta-join
-                  // union's lineage would otherwise be re-ANALYZED by
-                  // every downstream action (measured: ~60% of refresh
-                  // wall time was driver-side planning between jobs) —
-                  // the checkpoint truncates every later plan to a scan
-                  // of the group-count-sized delta (opt r15, guide §3.3)
-                  val delta0 = joined.groupBy(groupAliases.map(col): _*)
-                    .agg(aggCols.head, aggCols.tail: _*)
-                    .localCheckpoint(eager = true)
-                  try {
-                    // NULL group key ⇒ NULL-keyed delta row; NULL summed
-                    // value ⇒ positive `__nc_` counter — the same
-                    // triggers the old per-row probe fired on. ONE
-                    // aggregate action answers unsafe? + empty? (opt
-                    // r15) + would a decimal sum overflow? (opt r16 —
-                    // the overflow witness was its own delta⋈view action;
-                    // when a decimal sum exists it now left-joins the
-                    // group-count-sized materialization inside the SAME
-                    // probe pass. View group keys are unique by
-                    // construction, so the join preserves the delta's
-                    // row count and the max() witnesses are
-                    // duplicate-blind anyway.)
-                    import org.apache.spark.sql.functions.count
-                    val hasDecimalSum = sumAliases.nonEmpty &&
-                      delta0.schema.fields.filter(_.name.startsWith("__d_"))
-                        .exists(_.dataType.isInstanceOf[
-                          org.apache.spark.sql.types.DecimalType])
-                    val sd = delta0.as("s")
-                    val probeSrc =
-                      if (!hasDecimalSum) sd
-                      else sd.join(t.read(spark).as("t"),
-                        groupAliases.map(g =>
-                          col(s"s.`$g`") <=> col(s"t.`$g`")).reduce(_ && _),
-                        "left")
-                    val unsafe = groupAliases.map(g => col(s"s.`$g`").isNull) ++
-                      sumAliases.map(a => col(s"s.`__nc_$a`") > 0L)
-                    val ovfWitness =
-                      if (!hasDecimalSum) lit(false)
-                      else sumAliases.map { a =>
-                        col(s"t.`$a`").isNotNull &&
-                          col(s"s.`__d_$a`").isNotNull &&
-                          (col(s"t.`$a`") + col(s"s.`__d_$a`")).isNull
-                      }.reduce(_ || _)
-                    val probe = probeSrc.agg(
-                      count(lit(1)).as("__n"),
-                      org.apache.spark.sql.functions.max(
-                        when(unsafe.reduce(_ || _), lit(1L))
-                          .otherwise(lit(0L))).as("__u"),
-                      org.apache.spark.sql.functions.max(
-                        when(ovfWitness, lit(1L)).otherwise(lit(0L)))
-                        .as("__ov")).head()
-                    val nGroups = probe.getLong(0)
-                    val anyUnsafe = !probe.isNullAt(1) && probe.getLong(1) == 1L
-                    val anyOverflow = !probe.isNullAt(2) && probe.getLong(2) == 1L
-                    val dFields =
-                      delta0.schema.fields.filter(_.name.startsWith("__d_"))
-                    val wm = Map(ViewStore.MviewAppId -> 0L) ++
-                      (0 until n).map(i =>
-                        GraftSqlParser.mviewSrcKey(i) -> cur(i).toLong)
-                    if (anyUnsafe) None
-                    else if (!GraftSqlParser.deltaFoldableTypes(dFields.toSeq)) None
-                    else if (nGroups == 0L) {
-                      // watermarks must still advance (ADVICE r14)
-                      t.commitTxns(wm, "mview-watermark")
-                      Some(Seq(Row("noop", cur.head)))
-                    } else {
-                      val delta = delta0.drop(sumAliases.map(a => s"__nc_$a"): _*)
-                      if (anyOverflow) None // fused witness, see probe above
-                      else {
-                        GraftSqlParser.mergeGroupDelta(spark, t, delta,
-                          groupAliases, countAlias, sumAliases, wm,
-                          avgAliases = avgs.map { case (_, sa, a) => (sa, a) })
-                        Some(Seq(Row("incremental", cur.head)))
-                      }
-                    }
-                  } finally { delta0.unpersist(blocking = false); () }
-                } finally {
-                  cdcCache.values.foreach(_.unpersist(blocking = false))
-                }
-              } catch {
-                case scala.util.control.NonFatal(_) => None
-              }
-            }
-          }
-      case _ => None
-    }
-  }
+  override def run(spark: SparkSession): Seq[Row] = Mview.refresh(spark, root)
 }
 
 /** `DROP MATERIALIZED VIEW txtable.\`root\`` — removes the definition;
@@ -2368,9 +1250,10 @@ case class TxDropMviewCommand(root: String) extends LeafRunnableCommand {
 /** `DESCRIBE DETAIL` on a VIEW or MATERIALIZED VIEW path (round-13
   * verdict #7): reports the object KIND (TEMP VIEW / VIEW /
   * MATERIALIZED VIEW), the stored definition text, and — for a
-  * materialized view — the applied-through source version its last
-  * refresh recorded. Keeps the catalog surface honest now that three
-  * object kinds share the path namespace. */
+  * materialized view — the applied-through version its last refresh
+  * recorded, the same figure REFRESH reports as `source_version`. Keeps
+  * the catalog surface honest now that three object kinds share the path
+  * namespace. */
 case class TxDescribeViewCommand(root: String) extends LeafRunnableCommand {
   import GraftSqlParser.attr
   override val output: Seq[Attribute] = Seq(
@@ -2379,9 +1262,8 @@ case class TxDescribeViewCommand(root: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     ViewStore.mviewDefinition(root) match {
       case Some(defn) =>
-        val wm = TxTable.open(root).snapshot()
-          .txns.getOrElse(ViewStore.MviewAppId, 0L).toInt
-        Seq(Row("MATERIALIZED VIEW", defn, wm))
+        Seq(Row("MATERIALIZED VIEW", defn,
+          Mview.appliedThrough(TxTable.open(root).snapshot().txns)))
       case None =>
         val defn = ViewStore.definition(root).getOrElse(
           throw new IllegalArgumentException(s"no view at txtable.`$root`"))

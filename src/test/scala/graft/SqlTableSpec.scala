@@ -1137,6 +1137,10 @@ class SqlTableSpec extends AnyFunSuite with SparkFixture {
     // an idle window is a recognized noop
     assert(spark.sql(s"REFRESH MATERIALIZED VIEW ${q(mv)}").head()
       .getString(0) == "noop")
+    // DESCRIBE DETAIL reports the version the last REFRESH reported
+    val detail = spark.sql(s"DESCRIBE DETAIL ${q(mv)}").head()
+    assert(detail.getInt(2) == r.getInt(1),
+      s"applied_through must match REFRESH's source_version: $detail vs $r")
     // outer join: never the delta path — always-sound full
     val mv2 = s"${tmpRoot()}/mvjo"
     spark.sql(s"CREATE MATERIALIZED VIEW ${q(mv2)} AS " +
@@ -1315,6 +1319,73 @@ class SqlTableSpec extends AnyFunSuite with SparkFixture {
          |FROM ${q(fa.root)} f JOIN ${q(db.root)} d ON f.k = d.k
          |GROUP BY d.g ORDER BY g""".stripMargin).collect().toSeq
     assert(got == want, s"join avg drifted:\n$got\n$want")
+  }
+
+  test("aggregate mview spellings: each refresh takes its pinned mode and equals the recompute") {
+    // one spelling per row: created over the same fact ⋈ dim pair, fed
+    // one fact insert, refreshed. The mode pins which spellings the
+    // delta path admits (a one-member chain is any single-source view,
+    // aliased or not; min/max only over one source); every view must
+    // equal its recompute whichever path it took.
+    Tables.ensure(spark)
+    val fact = new TxTable(tmpRoot(), Seq("k"))
+    fact.append(spark, spark.range(40).toDF("k")
+      .withColumn("g", col("k") % 4).withColumn("x", col("k") * 3 % 17)
+      .withColumn("dk", col("k") % 8).repartitionByRange(2, col("k")))
+    val dim = new TxTable(tmpRoot(), Seq("dk"))
+    dim.append(spark, spark.range(8).toDF("dk")
+      .withColumn("h", col("dk") % 3).repartitionByRange(1, col("dk")))
+    val f = q(fact.root)
+    val d = q(dim.root)
+    val join = s"FROM $f f JOIN $d d ON f.dk = d.dk"
+    // (label, definition, the view's stat column, expected refresh mode)
+    val shapes = Seq(
+      ("bare group", s"SELECT g, count(*) AS n, sum(x) AS sx FROM $f GROUP BY g",
+        "g", "incremental"),
+      ("renamed group", s"SELECT g AS gg, count(*) AS n, sum(x) AS sx FROM $f GROUP BY g",
+        "gg", "incremental"),
+      ("WHERE", s"SELECT g, count(*) AS n, sum(x) AS sx FROM $f WHERE x >= 2 GROUP BY g",
+        "g", "incremental"),
+      ("join, qualified group",
+        s"SELECT d.h AS h, count(*) AS n, sum(f.x) AS sx $join GROUP BY d.h",
+        "h", "incremental"),
+      ("join, bare group", s"SELECT h, count(*) AS n, sum(x) AS sx $join GROUP BY h",
+        "h", "incremental"),
+      ("aliased single source",
+        s"SELECT s.g, count(*) AS n, sum(s.x) AS sx FROM $f s GROUP BY s.g",
+        "g", "incremental"),
+      ("self-join",
+        s"SELECT a.g AS g, count(*) AS n FROM $f a JOIN $f b ON a.k = b.k GROUP BY a.g",
+        "g", "full"),
+      ("join + min", s"SELECT d.h AS h, count(*) AS n, min(f.x) AS mx $join GROUP BY d.h",
+        "h", "full"),
+      ("avg without its sum", s"SELECT g, count(*) AS n, avg(x) AS ax FROM $f GROUP BY g",
+        "g", "full"),
+      ("sum(DISTINCT)", s"SELECT g, count(*) AS n, sum(DISTINCT x) AS sx FROM $f GROUP BY g",
+        "g", "full"),
+      ("sum + sum", s"SELECT g, count(*) AS n, sum(x) + sum(k) AS s2 FROM $f GROUP BY g",
+        "g", "full"),
+      ("no count(*)", s"SELECT g, sum(x) AS sx FROM $f GROUP BY g", "g", "full"))
+    val views = shapes.map { case (label, defn, statCol, _) =>
+      val mv = s"${tmpRoot()}/mv"
+      spark.sql(s"CREATE MATERIALIZED VIEW ${q(mv)} " +
+        s"TBLPROPERTIES('statCols'='$statCol') AS $defn")
+      label -> mv
+    }.toMap
+    spark.sql(s"INSERT INTO $f VALUES (CAST(100 AS BIGINT), CAST(1 AS BIGINT), " +
+      "CAST(5 AS BIGINT), CAST(3 AS BIGINT))")
+    // every row is checked before the assertion, so one run names them all
+    val faults = shapes.flatMap { case (label, defn, _, mode) =>
+      val mv = views(label)
+      val r = spark.sql(s"REFRESH MATERIALIZED VIEW ${q(mv)}").head()
+      val got = spark.sql(s"SELECT * FROM ${q(mv)}").collect().map(_.toString).sorted
+      val want = spark.sql(defn).collect().map(_.toString).sorted
+      (if (r.getString(0) == mode) Nil
+       else Seq(s"$label: expected $mode, got $r")) ++
+        (if (got.toSeq == want.toSeq) Nil
+         else Seq(s"$label drifted:\n${got.toSeq}\n${want.toSeq}"))
+    }
+    assert(faults.isEmpty, faults.mkString("\n"))
   }
 
   test("mview avg maintenance: companion derivation == recompute, no-sum avg falls to full") {

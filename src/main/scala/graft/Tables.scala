@@ -48,6 +48,7 @@ object Tables {
     graft.functions.SortedIntersectSize.register(spark)
     graft.functions.SortedJaccardBp.register(spark)
     graft.functions.SortedJaccardGeBp.register(spark)
+    graft.functions.MinHashSig.register(spark)
     graft.functions.CharNgramHashes.register(spark)
     graft.functions.WinnowFps.register(spark)
     graft.functions.MightContain.register(spark)

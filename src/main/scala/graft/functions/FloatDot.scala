@@ -107,6 +107,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       SortedJaccardBp.info, SortedJaccardBp.builder _))
     ext.injectFunction((FunctionIdentifier("sorted_jaccard_ge_bp"),
       SortedJaccardGeBp.info, SortedJaccardGeBp.builder _))
+    ext.injectFunction((FunctionIdentifier("minhash32"),
+      MinHashSig.info, MinHashSig.builder _))
     ext.injectFunction((FunctionIdentifier("char_ngram_hashes"),
       CharNgramHashes.info, CharNgramHashes.builder _))
     ext.injectFunction((FunctionIdentifier("winnow_fps"),

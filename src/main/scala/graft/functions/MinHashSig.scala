@@ -1,58 +1,80 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
-/** MinHash signature as a reusable typed Aggregator (SURVEY §4 custom-work
-  * item 2; Broder, "On the resemblance and containment of documents",
-  * SEQUENCES 1997): folds a stream of tokens into a k-permutation min-signature in
-  * a single mutable buffer — one pass, map-side combinable via merge(), no
-  * row explosion.
+/** `minhash32(ws)`: the 32-permutation MinHash signature of one document
+  * (Broder, "On the resemblance and containment of documents", SEQUENCES
+  * 1997) from its word hashes `ws = xxhash64(word)`, computed row by row.
   *
-  * The per-(token, seed) hash is [[XxHash64Chain.hashStringInt]], which is
-  * byte-equal to the SQL expression `xxhash64(token, lit(seed))` (pinned by
-  * HashCompatSpec on the real corpus): the token's UTF-8 xxhash64 under
-  * Spark's seed 42 seeds one standard xxHash64 int round over the seed
-  * value. Signatures from this aggregator are therefore drop-in identical
-  * to the 32-MIN-aggregate expression formulation q_dedup_minhash first
-  * shipped with — same bands, same candidates, same confirmed pairs — while
-  * hashing each token's bytes ONCE for all k permutations instead of k
-  * times.
+  * Permutation s of word w is `xxhash64(w, lit(s))`, which Spark computes
+  * as [[XxHash64Chain.hashInt]]`(s, xxhash64(w))`: the word's hash seeds
+  * one xxHash64 int round over s. So `sig[s] = min over h in ws of
+  * hashInt(s, h)` is byte-equal to the 32-MIN-aggregate expression form
+  * `min(xxhash64(word, lit(s)))` grouped by document (pinned by
+  * HashCompatSpec on the real corpus), while it needs no token rows and no
+  * shuffle: it reads the same sorted word-hash array the exact-Jaccard
+  * confirm of [[graft.operators.MinHashLsh]] already builds.
   *
-  * Usage: `words.groupBy($"doc_id").agg(MinHashSig.minhash32($"word"))`.
+  * The order and repetition of `ws` do not matter and null elements are
+  * skipped (SQL `min` semantics); an empty array yields 32 × Long.MaxValue.
+  * NULL for NULL input. Evaluated once per document, never per pair, so
+  * interpreted eval is plenty — CodegenFallback keeps the surrounding
+  * whole-stage pipeline intact.
   */
-class MinHashSig(k: Int) extends Aggregator[String, Array[Long], Array[Long]] {
+case class MinHashSig(child: Expression) extends UnaryExpression with CodegenFallback {
 
-  override def zero: Array[Long] = Array.fill(k)(Long.MaxValue)
-
-  override def reduce(buf: Array[Long], token: String): Array[Long] = {
-    val base = XxHash64Chain.hashString(token)
-    var s = 0
-    while (s < k) {
-      val h = XxHash64Chain.hashInt(s, base)
-      if (h < buf(s)) buf(s) = h
-      s += 1
-    }
-    buf
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"minhash32 expects an array<bigint> argument, got $other")
   }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "minhash32"
 
-  override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
+  override protected def nullSafeEval(in: Any): Any = {
+    val ws = in.asInstanceOf[ArrayData]
+    val sig = Array.fill(MinHashSig.K)(Long.MaxValue)
     var i = 0
-    while (i < k) { if (b(i) < a(i)) a(i) = b(i); i += 1 }
-    a
+    while (i < ws.numElements()) {
+      if (!ws.isNullAt(i)) {
+        val base = ws.getLong(i)
+        var s = 0
+        while (s < MinHashSig.K) {
+          val h = XxHash64Chain.hashInt(s, base)
+          if (h < sig(s)) sig(s) = h
+          s += 1
+        }
+      }
+      i += 1
+    }
+    new GenericArrayData(sig)
   }
 
-  override def finish(buf: Array[Long]): Array[Long] = buf
-  override def bufferEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
-  override def outputEncoder: Encoder[Array[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }
 
 object MinHashSig {
-  /** 32-permutation signature column aggregator. */
-  def minhash32(col: Column): Column = udaf(new MinHashSig(32)).apply(col)
+  /** Permutations per signature: 8 LSH bands of 4. */
+  val K = 32
+
+  val info = new ExpressionInfo(classOf[MinHashSig].getName, "minhash32")
+
+  private[functions] def builder(children: Seq[Expression]): Expression = {
+    require(children.length == 1, "minhash32 expects exactly 1 argument")
+    MinHashSig(children.head)
+  }
+
+  /** Harness-session registration (idempotent). */
+  def register(spark: SparkSession): Unit =
+    spark.sessionState.functionRegistry.registerFunction(
+      FunctionIdentifier("minhash32"), info, builder _)
 
   /** Signature-estimated Jaccard: fraction of matching components. */
   def estimate(a: Array[Long], b: Array[Long]): Double = {

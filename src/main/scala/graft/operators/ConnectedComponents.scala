@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   * takes the minimum label among itself and its neighbors, so the minimum
   * id of a component floods outward and the fixpoint labels every vertex
   * with its component's smallest id — a unique, deterministic clustering
-  * (no dependence on join or partition order). Convergence is detected by
-  * the label sum, which strictly decreases until the fixpoint; iterations
-  * are O(graph diameter), and near-dup graphs are near-cliques (diameter
-  * 2-3) so a handful of passes suffice.
+  * (no dependence on join or partition order). The loop stops on the
+  * first round in which no label drops — exactly the fixpoint; rounds are
+  * O(graph diameter), and near-dup graphs are near-cliques (diameter 2-3)
+  * so a handful of passes suffice.
   *
   * Every iteration is one shuffle join (edges ⋈ labels) plus a min
   * aggregation — the map-side-combinable shape that scales out; lineage is
@@ -31,15 +31,17 @@ object ConnectedComponents {
 
   /** Component label (smallest reachable vertex id) for every vertex.
     *
-    * Cost shape: exactly ONE Spark job per iteration — `next` is a LAZY
-    * localCheckpoint whose first (and only) materialization is driven by
-    * the convergence aggregate itself, so the fixpoint check rides the
-    * same job that builds the labels instead of paying a second pass.
-    * Only vertices incident to an edge enter the loop (isolated vertices
-    * can never change label — they rejoin at the end), so iteration cost
-    * tracks the EDGE set, not the vertex set: on a 100 TB corpus where
-    * near-dups are a small fraction, the loop runs over that fraction
-    * while the untouched majority is a single final join away.
+    * Cost shape: initialisation plus one round per flooding step, and the
+    * round that changes nothing ends the loop — a graph already at its
+    * fixpoint after initialisation (every near-dup clique) runs one round.
+    * Each round is one label frame, a lazy localCheckpoint whose shuffle
+    * stages run as their own jobs under AQE, plus one change-count probe
+    * that materializes it; nothing else touches the driver. Only vertices
+    * incident to an edge enter the loop (isolated vertices can never
+    * change label — they rejoin at the end), so round cost tracks the
+    * EDGE set, not the vertex set: on a 100 TB corpus where near-dups are
+    * a small fraction, the loop runs over that fraction while the
+    * untouched majority is a single final join away.
     *
     * @param vertices one row per vertex
     * @param idCol    vertex id column (numeric; min must be meaningful)
@@ -55,107 +57,62 @@ object ConnectedComponents {
   def minLabel(vertices: DataFrame, idCol: String, edges: DataFrame,
       srcCol: String, dstCol: String, maxIter: Int = 64): DataFrame = {
     // Edge GENERATION is usually the expensive part (a similarity pair
-    // join); the symmetrized view scans it twice, and concurrent branch
-    // tasks race the cache, so persist + materialize the directed edges
-    // ONCE before fanning out — the pair pipeline then runs exactly once
-    // regardless of how many times the loop re-reads sym.
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(label: String): Unit = if (debug) {
-      println(f"[cc] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
-    // localCheckpoint, not persist (round-10, the StarContraction lesson):
-    // caching pins the pair join's 32-wide shuffle layout before AQE can
-    // right-size it, so every round's map stages schedule a shuffle-width
-    // fan of near-empty tasks over a demo-scale edge set; the checkpoint
-    // stores the AQE-FINAL layout (compact when small, proportionally
-    // wide at 100 TB) and still guarantees the pair pipeline runs ONCE.
+    // join) and every round re-reads the edges, so they are cut ONCE.
+    // localCheckpoint, not persist (the StarContraction lesson): caching
+    // pins the pair join's shuffle layout before AQE can right-size it,
+    // so every round's map stages would schedule a shuffle-width fan of
+    // near-empty tasks over a demo-scale edge set; the checkpoint stores
+    // the AQE-FINAL layout (compact when small, proportionally wide at
+    // 100 TB) and still runs the pair pipeline ONCE.
     val e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .localCheckpoint(eager = false)
-    var eLoop = e
     try {
-      // inside the try: if the (expensive) pair-generation join throws
-      // during materialization, the finally still releases the checkpoint
-      val n = e.count()
-      lap("edges-materialize")
-      // a sub-10M-edge graph's per-round frames are KBs — at the
-      // session's full shuffle width every round schedules fans of
-      // near-empty tasks (the StarContraction finding; measured at 32
-      // partitions: 0.9 s/round vs 0.3-0.4 s at narrow width on the
-      // identical plan). Run the LOOP in a cloned session pinned to 8
-      // partitions; a ≥10M-edge graph keeps the caller's session and
-      // width. The clone owns its SQLConf, so nothing leaks (round-10
-      // ADVICE discipline).
-      val sess = vertices.sparkSession
-      val small = n < 10000000L
-      val loopSess = if (!small) sess else {
-        val s = sess.newSession()
-        s.conf.set("spark.sql.shuffle.partitions",
-          math.min(8, sess.conf.get("spark.sql.shuffle.partitions", "32").toInt).toString)
-        s
-      }
-      if (small) {
-        // re-root the checkpointed edges in the loop session; its own
-        // checkpoint makes the Row conversion run once, not per scan
-        eLoop = loopSess.createDataFrame(e.rdd, e.schema)
-          .localCheckpoint(eager = false)
-      }
       // sym is NOT its own checkpoint: it is two map-side scans of the
       // checkpointed directed edges — a second materialization would pay
       // a full write of 2|E| rows up front to save per-round reads that
       // are already local
-      val sym = eLoop.unionAll(eLoop.select(col("b").as("a"), col("a").as("b")))
-      // sum() of zero rows is NULL — coalesce so an empty active set
-      // converges immediately instead of NPE-ing
-      def labelSum(df: DataFrame): Long =
-        df.agg(coalesce(sum(col("component")), lit(0L))).head().getLong(0)
-      // Round 1 fused with initialization: each active vertex's first label
-      // is min(self, neighbors), computed directly from the edge list — no
-      // separate distinct-vertices pass (the min-agg dedups endpoint
-      // repetition for free, so a distinct would be a wasted shuffle).
+      val sym = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
+      // Initialisation: each active vertex's first label is min(self,
+      // neighbors), computed directly from the edge list — no separate
+      // distinct-vertices pass (the min-agg dedups endpoint repetition for
+      // free, so a distinct would be a wasted shuffle). No probe of its
+      // own: round 1's probe materializes it in the same pass.
       var labels = sym.select(col("b").as("id"), col("a").as("component"))
         .unionByName(sym.select(col("a").as("id"), col("a").as("component")))
         .groupBy(col("id")).agg(min(col("component")).as("component"))
-        .localCheckpoint(eager = false) // materialized by iter-1's probe
-      // No separate init probe: round 1's convergence sum materializes the
-      // init labels in the SAME job (the lazy checkpoint makes them
-      // reusable from round 2 on). The sentinel can never equal a real
-      // label sum, so the loop always runs round 1; a graph already at
-      // fixpoint after init just pays one confirming round — strictly
-      // cheaper than paying an extra action on EVERY call (measured:
-      // the init probe read 1.2 s at sf0.1, ~3× a round's cost).
-      var prevSum = Long.MinValue
-      lap("init-labels")
+        .localCheckpoint(eager = false)
+      val idType = labels.schema("component").dataType
       var converged = false
       var iter = 1
-      // Per-round cost notes (measured at sf0.1, GRAFT_CC_DEBUG=1):
-      // ~0.25 s/round with AQE ON — AQE coalesces the tiny label shuffles
-      // and converts the edge join to broadcast at runtime; forcing AQE
-      // off TRIPLES the round cost (32-partition SMJ on 2k-row frames).
-      // A label-only pointer jump (min(own, label(label))) was tried and
-      // reverted: it cannot cross plateau minima (the local best vertex's
-      // label is itself), so it saved zero rounds and paid one extra
-      // shuffle per round. Round count IS the graph's min-flooding
-      // distance; loose-threshold geometric graphs (cosine ≥ 0.30) have
-      // honest diameters in the tens. The sub-O(diameter) alternative is
-      // Kiveris-style star contraction, which rewrites the EDGE set per
-      // round — graph-diameter-proof, but strictly more shuffles per
-      // round; not worth it below diameters in the hundreds.
+      // Rounds run at the caller's shuffle width: AQE coalesces the
+      // KB-sized round shuffles and turns the edge join into a broadcast
+      // at runtime, and each checkpoint keeps that coalesced layout.
+      // Round count IS the graph's min-flooding distance. A label-only
+      // pointer jump (min(own, label(label))) was tried and reverted: it
+      // cannot cross plateau minima (the local best vertex's label is
+      // itself), so it saved zero rounds and paid one extra shuffle per
+      // round. The sub-O(diameter) alternative is [[StarContraction]],
+      // which rewrites the EDGE set per round — strictly more shuffles
+      // per round; not worth it below diameters in the hundreds.
       while (!converged && iter < maxIter) {
+        // each vertex's previous label rides the round's aggregate (only
+        // the `labels` branch carries it), so the fixpoint test is a
+        // count of labels that dropped: no label arithmetic, which
+        // would overflow on 64-bit hashed ids
         val next = sym.join(labels, col("a") === col("id"))
-          .select(col("b").as("id"), col("component"))
-          .unionByName(labels)
-          .groupBy(col("id")).agg(min(col("component")).as("component"))
+          .select(col("b").as("id"), col("component"),
+            lit(null).cast(idType).as("prev"))
+          .unionByName(labels.select(col("id"), col("component"),
+            col("component").as("prev")))
+          .groupBy(col("id"))
+          .agg(min(col("component")).as("component"), min(col("prev")).as("prev"))
           .localCheckpoint(eager = false)
-        val s = labelSum(next)
-        lap(s"iter-$iter sum=$s")
+        val changed = next.filter(col("component") < col("prev")).count()
         // `next` is materialized by the probe, so the superseded round's
         // checkpoint blocks can be released NOW instead of waiting for a
-        // GC-driven ContextCleaner pass (round-9 ADVICE leak)
+        // GC-driven ContextCleaner pass
         CheckpointRelease.release(labels)
-        converged = s == prevSum
-        prevSum = s
+        converged = changed == 0L
         labels = next
         iter += 1
       }
@@ -164,21 +121,12 @@ object ConnectedComponents {
           s"connected components did not converge in $maxIter iterations — " +
             "labels are not a fixpoint; raise maxIter only if the graph " +
             "genuinely has that diameter")
-      // re-root the converged labels back in the CALLER's session before
-      // the final join (label frames are vertex-count-sized; cross-session
-      // plan mixing is not a contract Spark makes)
-      val out =
-        if (small) sess.createDataFrame(labels.rdd, labels.schema)
-        else labels
       // isolated vertices: own id is the component; edge-incident vertices
       // take the converged label (left join: labels ⊆ vertices)
       vertices.select(col(idCol).as("id")).as("v")
-        .join(out.as("l"), col("v.id") === col("l.id"), "left")
+        .join(labels.as("l"), col("v.id") === col("l.id"), "left")
         .select(col("v.id").as("id"),
           coalesce(col("l.component"), col("v.id")).as("component"))
-    } finally {
-      if (!(eLoop eq e)) CheckpointRelease.release(eLoop)
-      CheckpointRelease.release(e)
-    }
+    } finally CheckpointRelease.release(e)
   }
 }

@@ -1,13 +1,13 @@
 package graft.operators
 
-import graft.functions.MinHashSig
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** MinHash-LSH near-duplicate detection — the linear-cost scale path of
-  * the dedup family (exact tier: [[SetSimilarity]]): 32 per-word xxhash64
-  * min-signatures → 8 bands of 4 → band-hash bucket join for candidates →
-  * signature prefilter → exact sorted-hash-set Jaccard confirm.
+  * the dedup family (exact tier: [[SetSimilarity]]): per-document sorted
+  * word hashes and their 32 xxhash64 min-signatures → 8 bands of 4 →
+  * band-hash bucket join for candidates → signature prefilter → exact
+  * sorted-hash-set Jaccard confirm.
   *
   * Cost is ~linear in documents when the ≥threshold pair set is sparse
   * (the real-corpus case): every stage is an equi join or hash aggregate
@@ -21,16 +21,24 @@ import org.apache.spark.sql.functions._
   */
 object MinHashLsh {
 
-  /** 32-minhash signature per document over its distinct whitespace words
-    * — one pass via the typed [[MinHashSig]] Aggregator (map-side
-    * combinable, hashes each token's bytes ONCE for all 32 permutations;
-    * byte-equal to the 32-MIN `xxhash64(word, lit(s))` expression form,
-    * pinned by HashCompatSpec). */
+  /** Per-document features, one row per doc_id (the operator's input
+    * contract): `ws`, the sorted xxhash64 values of the distinct
+    * whitespace words — the set the exact confirm compares — and `sig`,
+    * the 32-minhash signature derived from `ws` in the same row
+    * ([[graft.functions.MinHashSig]]). Docs with NULL text have no words, so they carry no
+    * features and never pair. */
+  private def features(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull)
+      .select(col("doc_id"),
+        expr("array_sort(transform(array_distinct(split(text, ' ')), w -> xxhash64(w)))").as("ws"))
+      .withColumn("sig", expr("minhash32(ws)"))
+
+  /** 32-minhash signature per document over its distinct whitespace words,
+    * as (doc_id, sig): a map-only projection, no token rows and no
+    * shuffle. Byte-equal to the 32-MIN `xxhash64(word, lit(s))` expression
+    * form grouped by doc_id (pinned by HashCompatSpec). */
   def signatures(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("word"))
-      .groupBy(col("doc_id"))
-      .agg(MinHashSig.minhash32(col("word")).as("sig"))
+    features(docs).select(col("doc_id"), col("sig"))
 
   /** Banded candidate pairs (da < db), deduped. 8 bands × 4 rows: a pair
     * with signature agreement s collides in some band with probability
@@ -53,42 +61,38 @@ object MinHashLsh {
       .distinct()
   }
 
-  /** Full pipeline over (doc_id: long, text: string): near-dup pairs with
-    * exact word-set Jaccard ≥ minBp basis points, as (da, db, jacc_bp).
+  /** Full pipeline over (doc_id: long, text: string), one row per doc_id:
+    * near-dup pairs with exact word-set Jaccard ≥ minBp basis points, as
+    * (da, db, jacc_bp).
     *
-    * The signature-estimate prefilter (agreement ≥ 32·t − 8, i.e. 14/32 at
-    * t = 0.7) keeps P(drop a true ≥t pair) ≈ P(Binom(32, t) < k) ~ 1e-3
-    * while rejecting the low-jaccard bulk before the exact join. The sig
-    * attach is a plain equi join on doc_id: sigs is O(corpus), so an
-    * explicit broadcast hint would cap the operator at executor memory
-    * (~1e8 docs × 256 B); locally AQE may still elect a broadcast from the
-    * observed size — the right call at either scale, made from data. The
-    * confirm stage is the same codegen'd sorted-hash merge pass as the
-    * exact tier (`sorted_jaccard_bp`, identical up to 64-bit hash
-    * collisions), so LSH and exact answers agree wherever both run. */
+    * One feature frame `(doc_id, ws, sig)` feeds both stages: the banded
+    * candidate join reads its `sig`, and each candidate side is attached
+    * ONCE with `sig` and `ws` together. The signature-estimate prefilter
+    * (agreement ≥ 32·t − 8, i.e. 14/32 at t = 0.7) keeps
+    * P(drop a true ≥t pair) ≈ P(Binom(32, t) < k) ~ 1e-3 while rejecting
+    * the low-jaccard bulk before the exact merge pass. The attaches are
+    * plain equi joins on doc_id: the frame is O(corpus), so an explicit
+    * broadcast hint would cap the operator at executor memory; locally AQE
+    * may still elect a broadcast from the observed size — the right call
+    * at either scale, made from data. The confirm is the same codegen'd
+    * sorted-hash merge pass as the exact tier (`sorted_jaccard_bp`,
+    * identical up to 64-bit hash collisions), so LSH and exact answers
+    * agree wherever both run.
+    *
+    * The feature frame is a lazy localCheckpoint, not a persist: it is
+    * computed once for the band build and both attaches, and its blocks
+    * belong to the returned frame's lineage, so the ContextCleaner
+    * reclaims them once the caller drops the result — no CacheManager
+    * entry outlives the call. */
   def nearDupPairs(docs: DataFrame, minBp: Long): DataFrame = {
-    // persist: sigs feeds the band build AND both candidate sig-attach
-    // joins — without it the explode+agg pipeline re-runs per consumer
-    val sigs = signatures(docs).persist()
+    val feats = features(docs).localCheckpoint(eager = false)
     val prefilter = math.max(0L, (32L * minBp) / 10000L - 8L)
-    val cands = candidateKeys(sigs)
-      .join(sigs.select(col("doc_id"), col("sig").as("siga")), col("da") === col("doc_id"))
-      .drop("doc_id")
-      .join(sigs.select(col("doc_id"), col("sig").as("sigb")), col("db") === col("doc_id"))
+    def side(s: String) = feats.select(col("doc_id").as(s"d$s"),
+      col("sig").as(s"sig$s"), col("ws").as(s"ws$s"))
+    candidateKeys(feats)
+      .join(side("a"), "da")
+      .join(side("b"), "db")
       .filter(expr(s"size(filter(zip_with(siga, sigb, (x, y) -> x = y), b -> b)) >= $prefilter"))
-      .select(col("da"), col("db"))
-    // exact confirm via the sorted-hash-set merge pass (two equi joins +
-    // one codegen'd pass per candidate; no corpus re-tokenization).
-    // persist: both attach joins consume sets but prune different aliases,
-    // so without the cache the HOF tokenize+sort pipeline runs twice
-    val sets = docs.select(col("doc_id"),
-      expr("array_sort(transform(array_distinct(split(text, ' ')), w -> xxhash64(w)))").as("ws"))
-      .persist()
-    cands
-      .join(sets.select(col("doc_id"), col("ws").as("wsa")), col("da") === col("doc_id"))
-      .drop("doc_id")
-      .join(sets.select(col("doc_id"), col("ws").as("wsb")), col("db") === col("doc_id"))
-      .drop("doc_id")
       .select(col("da"), col("db"), expr("sorted_jaccard_bp(wsa, wsb)").as("jacc_bp"))
       .filter(col("jacc_bp") >= minBp)
   }

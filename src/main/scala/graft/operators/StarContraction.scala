@@ -47,12 +47,6 @@ object StarContraction {
   private[graft] def componentsCounted(vertices: DataFrame, idCol: String,
       edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 32): (DataFrame, Int) = {
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    var t0 = System.nanoTime()
-    def lap(label: String): Unit = if (debug) {
-      println(f"[star] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
-    }
     // localCheckpoint, not persist: caching pins the upstream pair join's
     // 32-wide shuffle layout before AQE can right-size it
     // (canChangeCachedPlanOutputPartitioning is off by default), so every
@@ -66,7 +60,6 @@ object StarContraction {
       .filter(col("u") =!= col("v")).localCheckpoint(eager = false)
     try {
       val n = e0.count() // materialize once; the loop re-reads the checkpoint
-      lap(s"edges-materialize n=$n")
 
       // one star operation: per node u over its closed neighborhood,
       // m = min(u, min(neighbors)); re-emit (n, m) for the selected
@@ -157,7 +150,6 @@ object StarContraction {
           .distinct() // ONE dedup per alternation, folded into the probe job
           .localCheckpoint(eager = false) // materialized by the probe
         val viol = starViolations(next)
-        lap(s"alt-$iter violations=$viol")
         // the superseded alternation's checkpoint blocks are released
         // deterministically — across the bench suite the un-GC'd rounds
         // otherwise accumulate executor memory (round-9 ADVICE)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.{MinHashSig, SimHashSig}
+import graft.functions.SimHashSig
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -236,12 +236,14 @@ object LlmExt extends QueryModule {
   }
 
   /** MinHash-LSH near-dup at scale (SURVEY §2.9 design op, as a real
-    * runnable pipeline): [[graft.operators.MinHashLsh]] — 32 per-word
-    * xxhash64 min-signatures → 8 bands of 4 → band-hash bucket join →
-    * signature prefilter → exact sorted-hash confirm. No oracle (xxhash64
-    * is engine-specific); q_sim_jaccard is the correctness twin for the
-    * confirm stage, and SparseLshSpec demonstrates the linear-cost claim
-    * on a generated sparse corpus with planted near-dups.
+    * runnable pipeline): [[graft.operators.MinHashLsh]] — one per-doc
+    * feature row (sorted word hashes plus the 32 xxhash64 min-signatures
+    * derived from them, no token shuffle) → 8 bands of 4 → band-hash
+    * bucket join → signature prefilter → exact sorted-hash confirm. No
+    * oracle (xxhash64 is engine-specific); q_sim_jaccard is the
+    * correctness twin for the confirm stage, and SparseLshSpec
+    * demonstrates the linear-cost claim on a generated sparse corpus with
+    * planted near-dups.
     *
     * Bounded to doc_id < 1000: this synthetic corpus breaks LSH's sparsity
     * assumption — 41% of ALL doc pairs have word-Jaccard >= 0.7

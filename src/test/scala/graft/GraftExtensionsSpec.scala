@@ -54,6 +54,8 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkFixture {
         .head.getBoolean(0))
       assert(s.sql("SELECT size(char_ngram_hashes('abcd', 3))")
         .head.getInt(0) == 2)
+      assert(s.sql("SELECT size(minhash32(array(1L, 2L)))")
+        .head.getInt(0) == 32)
       // bloom build + probe round-trip through the registered pair
       assert(s.sql(
         """SELECT might_contain(

@@ -1,13 +1,15 @@
 package graft
 
-import graft.functions.{MinHashSig, SimHashSig, XxHash64Chain}
+import graft.functions.{SimHashSig, XxHash64Chain}
+import graft.operators.MinHashLsh
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the JVM-side xxhash64 replica (XxHash64Chain) byte-equal to the
-  * Spark SQL `xxhash64` expression — the property that lets the typed
-  * Aggregators (MinHashSig / SimHashSig) replace expression pipelines in
-  * q_dedup_minhash / q_dedup_simhash without changing any output row. */
+  * Spark SQL `xxhash64` expression — the property that lets the row-local
+  * MinHash signature (MinHashSig) and the typed SimHashSig Aggregator
+  * replace expression pipelines in q_dedup_minhash / q_dedup_simhash
+  * without changing any output row. */
 class HashCompatSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
@@ -36,23 +38,37 @@ class HashCompatSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("MinHashSig aggregator == 32-MIN xxhash64 expression signatures") {
-    val tokens = Tables.documents(spark, sf)
-      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("word"))
-    val viaAgg = tokens.groupBy(col("doc_id"))
-      .agg(MinHashSig.minhash32(col("word")).as("sig"))
-      .as[(Long, Seq[Long])].collect().toMap
+  private lazy val tokens = Tables.documents(spark, sf)
+    .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("word"))
+
+  /** The 32-MIN `xxhash64(word, lit(s))` expression form, per doc. */
+  private lazy val minExprSigs: Map[Long, Seq[Long]] = {
     val minCols = (0 until 32).map(s => min(xxhash64(col("word"), lit(s))).as(s"m$s"))
-    val viaExpr = tokens.groupBy(col("doc_id"))
+    tokens.groupBy(col("doc_id"))
       .agg(minCols.head, minCols.tail: _*)
       .select(col("doc_id"), array((0 until 32).map(s => col(s"m$s")): _*).as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
+  }
+
+  test("MinHashSig aggregator == 32-MIN xxhash64 expression signatures") {
+    // MinHashSig (`minhash32`) over each doc's aggregated word hashes, every
+    // token twice, in scan order: the signature is a min over the multiset,
+    // so order and repetition must not matter
+    val viaAgg = tokens.select(col("doc_id"), xxhash64(col("word")).as("h"))
+      .groupBy(col("doc_id"))
+      .agg(expr("minhash32(concat(collect_list(h), collect_list(h)))").as("sig"))
+      .as[(Long, Seq[Long])].collect().toMap
+    val viaExpr = minExprSigs
     assert(viaAgg.nonEmpty && viaAgg == viaExpr)
   }
 
+  test("MinHashLsh.signatures (row-local, from the confirm's word hashes) == 32-MIN expression form") {
+    val rowLocal = MinHashLsh.signatures(Tables.documents(spark, sf))
+      .as[(Long, Seq[Long])].collect().toMap
+    assert(rowLocal.nonEmpty && rowLocal == minExprSigs)
+  }
+
   test("SimHashSig aggregator == 64x-explode vote formulation signatures") {
-    val tokens = Tables.documents(spark, sf)
-      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("word"))
     val viaAgg = tokens.groupBy(col("doc_id"))
       .agg(SimHashSig.simhash64(col("word")).as("simhash"))
       .as[(Long, Long)].collect().toMap

@@ -4,17 +4,16 @@ import graft.functions.MinHashSig
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The typed Aggregator form of the MinHash signature: one-pass, map-side
-  * combinable, no row explosion. */
+/** The row-local MinHash signature `minhash32` over a document's word
+  * hashes: no token rows, no shuffle. */
 class MinHashSigSpec extends AnyFunSuite with SparkFixture {
   import spark.implicits._
 
   private def sigs(parts: Int): Map[Long, Seq[Long]] =
     Tables.documents(spark, sf)
       .repartition(parts)
-      .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("word"))
-      .groupBy(col("doc_id"))
-      .agg(MinHashSig.minhash32(col("word")).as("sig"))
+      .select(col("doc_id"),
+        expr("minhash32(transform(array_distinct(split(text, ' ')), w -> xxhash64(w)))").as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
 
   test("signature is deterministic and partitioning-invariant (merge law)") {

@@ -56,4 +56,11 @@ class SparseLshSpec extends AnyFunSuite with SparkFixture {
     // 39 shared of ≤41 distinct → every planted pair's exact jaccard ≥ 0.9
     assert(out.forall(_._3 >= 9000L))
   }
+
+  test("nearDupPairs leaves no CacheManager entry behind") {
+    spark.catalog.clearCache()
+    val docs = Tables.documents(spark, sf)
+    (1 to 3).foreach(_ => MinHashLsh.nearDupPairs(docs, minBp = 7000L).collect())
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }

@@ -34,9 +34,9 @@ import org.apache.spark.sql.functions._
 object Tables {
 
   /** Idempotent session configs + extension functions every query path
-    * depends on. (On a real cluster GraftExtensions injects float_dot via
-    * spark.sql.extensions; the harness builds its own sessions, so we also
-    * register here.) */
+    * depends on. (On a real cluster GraftExtensions injects the same
+    * functions and rules via spark.sql.extensions; the harness builds its
+    * own sessions, so this registers them from GraftExtensions' lists.) */
   def ensure(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -44,16 +44,10 @@ object Tables {
     // build-time static conf graft.Session sets in its builder):
     // `SELECT … FROM txtable.`/root`` works on any session that ran ensure
     spark.conf.set("spark.sql.catalog.txtable", "graft.sources.TxTableCatalog")
-    graft.functions.FloatDot.register(spark)
-    graft.functions.SortedIntersectSize.register(spark)
-    graft.functions.SortedJaccardBp.register(spark)
-    graft.functions.SortedJaccardGeBp.register(spark)
-    graft.functions.MinHashSig.register(spark)
-    graft.functions.CharNgramHashes.register(spark)
-    graft.functions.WinnowFps.register(spark)
-    graft.functions.MightContain.register(spark)
-    val rules = Seq(graft.plans.InferJaccardSizeBound,
-      graft.plans.FuseJaccardThreshold, graft.plans.OrderCostlyPredicatesLast,
+    graft.functions.GraftExtensions.functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
+    val rules = graft.functions.GraftExtensions.rules ++ Seq(
       // manifest stats → Catalyst: must run AFTER V2ScanRelationPushDown
       // (extension hooks all run before it; "User Provided Optimizers"
       // is the one post-pushdown logical batch)

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, Literal}
@@ -101,9 +99,4 @@ object CharNgramHashes {
     require(children.length == 2, "char_ngram_hashes expects exactly 2 arguments")
     CharNgramHashes(children.head, children(1))
   }
-
-  /** Harness-session registration (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("char_ngram_hashes"), info, builder _)
 }

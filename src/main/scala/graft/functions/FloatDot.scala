@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -89,37 +88,14 @@ object FloatDot {
     require(children.length == 2, "float_dot expects exactly 2 arguments")
     FloatDot(children.head, children(1))
   }
-
-  /** Harness-session registration (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("float_dot"), info, builder _)
 }
 
 /** Production entry point: `--conf spark.sql.extensions=graft.functions.GraftExtensions`
   * injects the engine's functions at session build time on any cluster. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("float_dot"), FloatDot.info, FloatDot.builder _))
-    ext.injectFunction((FunctionIdentifier("sorted_intersect_size"),
-      SortedIntersectSize.info, SortedIntersectSize.builder _))
-    ext.injectFunction((FunctionIdentifier("sorted_jaccard_bp"),
-      SortedJaccardBp.info, SortedJaccardBp.builder _))
-    ext.injectFunction((FunctionIdentifier("sorted_jaccard_ge_bp"),
-      SortedJaccardGeBp.info, SortedJaccardGeBp.builder _))
-    ext.injectFunction((FunctionIdentifier("minhash32"),
-      MinHashSig.info, MinHashSig.builder _))
-    ext.injectFunction((FunctionIdentifier("char_ngram_hashes"),
-      CharNgramHashes.info, CharNgramHashes.builder _))
-    ext.injectFunction((FunctionIdentifier("winnow_fps"),
-      WinnowFps.info, WinnowFps.builder _))
-    ext.injectFunction((FunctionIdentifier("might_contain"),
-      MightContain.info, MightContain.builder _))
-    ext.injectFunction((FunctionIdentifier("bloom_filter_agg"),
-      MightContain.aggInfo, MightContain.aggBuilder _))
-    ext.injectOptimizerRule(_ => graft.plans.InferJaccardSizeBound)
-    ext.injectOptimizerRule(_ => graft.plans.FuseJaccardThreshold)
-    ext.injectOptimizerRule(_ => graft.plans.OrderCostlyPredicatesLast)
+    GraftExtensions.functions.foreach(ext.injectFunction)
+    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     // NOTE: graft.plans.TxManifestStats is NOT injectable here — every
     // extension hook (operator batch, pre-CBO) runs BEFORE
@@ -131,4 +107,29 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // commands over graft.tables.TxTable; everything else delegates.
     ext.injectParser((_, delegate) => new graft.sql.GraftSqlParser(delegate))
   }
+}
+
+/** The ONE list of what the engine registers: the cluster path above
+  * injects it, and `graft.Tables.ensure` registers the same entries into
+  * sessions the harness builds itself. */
+object GraftExtensions {
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    (FunctionIdentifier("float_dot"), FloatDot.info, FloatDot.builder _),
+    (FunctionIdentifier("sorted_intersect_size"),
+      SortedIntersectSize.info, SortedIntersectSize.builder _),
+    (FunctionIdentifier("sorted_jaccard_bp"), SortedJaccardBp.info, SortedJaccardBp.builder _),
+    (FunctionIdentifier("sorted_jaccard_ge_bp"),
+      SortedJaccardGeBp.info, SortedJaccardGeBp.builder _),
+    (FunctionIdentifier("minhash32"), MinHashSig.info, MinHashSig.builder _),
+    (FunctionIdentifier("char_ngram_hashes"), CharNgramHashes.info, CharNgramHashes.builder _),
+    (FunctionIdentifier("winnow_fps"), WinnowFps.info, WinnowFps.builder _),
+    (FunctionIdentifier("might_contain"), MightContain.info, MightContain.builder _),
+    (FunctionIdentifier("bloom_filter_agg"), MightContain.aggInfo, MightContain.aggBuilder _))
+
+  /** Optimizer rules both paths run (Tables.ensure adds the two that must
+    * run after scan pushdown). */
+  val rules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] = Seq(
+    graft.plans.InferJaccardSizeBound,
+    graft.plans.FuseJaccardThreshold, graft.plans.OrderCostlyPredicatesLast)
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
@@ -43,12 +41,4 @@ object MightContain {
       case _ => throw new IllegalArgumentException(
         "bloom_filter_agg expects (xxhash64 value[, estimatedNumItems[, numBits]])")
     }
-
-  /** Harness-session registration (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("might_contain"), info, builder _)
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bloom_filter_agg"), aggInfo, aggBuilder _)
-  }
 }

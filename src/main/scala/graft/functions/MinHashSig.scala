@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -70,11 +68,6 @@ object MinHashSig {
     require(children.length == 1, "minhash32 expects exactly 1 argument")
     MinHashSig(children.head)
   }
-
-  /** Harness-session registration (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("minhash32"), info, builder _)
 
   /** Signature-estimated Jaccard: fraction of matching components. */
   def estimate(a: Array[Long], b: Array[Long]): Double = {

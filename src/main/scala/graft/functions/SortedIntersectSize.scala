@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -95,9 +93,4 @@ object SortedIntersectSize {
     require(children.length == 2, "sorted_intersect_size expects exactly 2 arguments")
     SortedIntersectSize(children.head, children(1))
   }
-
-  /** Harness-session registration (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("sorted_intersect_size"), info, builder _)
 }

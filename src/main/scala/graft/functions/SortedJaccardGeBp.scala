@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, TernaryExpression}
@@ -127,9 +125,4 @@ object SortedJaccardGeBp {
     require(children.length == 3, "sorted_jaccard_ge_bp expects exactly 3 arguments")
     SortedJaccardGeBp(children.head, children(1), children(2))
   }
-
-  /** Harness-session registration (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("sorted_jaccard_ge_bp"), info, builder _)
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, TernaryExpression}
@@ -117,9 +115,4 @@ object WinnowFps {
     require(children.length == 3, "winnow_fps expects exactly 3 arguments")
     WinnowFps(children.head, children(1), children(2))
   }
-
-  /** Harness-session registration (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("winnow_fps"), info, builder _)
 }

@@ -293,49 +293,6 @@ object StreamOps {
         (unix_micros(col("e_ts")) - unix_micros(col("p_ts"))).as("gap_us"))
   }
 
-  /** Spark 4's production state API (successor of flatMapGroupsWithState,
-    * SURVEY §4): the same previous-sample-per-key state as
-    * [[counterToRate]], held in a named ValueState on the RocksDB state
-    * store — typed state handles, TTL support, and state evolution come
-    * for free. StreamEquivalenceSpec pins it to the same batch twin
-    * (q_win_lag) as the legacy-API version. */
-  class CounterToRateProcessor extends StatefulProcessor[Long, Sample, Rate] {
-    @transient private var prev: ValueState[RateState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      prev = getHandle.getValueState[RateState](
-        "prevSample", Encoders.product[RateState], TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[Sample],
-        timerValues: TimerValues): Iterator[Rate] = {
-      // sort within the micro-batch so replays are deterministic; across
-      // batches the previous sample survives in the state store
-      val sorted = rows.toSeq.sortBy(s => (s.ts_us, s.event_id))
-      val out = Seq.newBuilder[Rate]
-      var p = if (prev.exists()) Some(prev.get()) else None
-      for (s <- sorted) {
-        p.foreach { pp =>
-          out += Rate(user, s.event_id, s.value - pp.lastValue, s.ts_us - pp.lastTsUs)
-        }
-        p = Some(RateState(s.ts_us, s.value))
-      }
-      p.foreach(prev.update)
-      out.result().iterator
-    }
-  }
-
-  /** Stateful counter→rate on the transformWithState API. Requires the
-    * RocksDB state store provider (the only provider the API supports). */
-  def counterToRateTws(events: DataFrame): Dataset[Rate] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
-      .as[Sample]
-      .groupByKey(_.user_id)
-      .transformWithState(new CounterToRateProcessor, TimeMode.None(), OutputMode.Append())
-  }
-
   final case class FlapState(last: Boolean, trans: Long, n: Long)
   final case class FlapRow(user_id: Long, n_events: Long, n_trans: Long)
 

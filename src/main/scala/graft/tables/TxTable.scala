@@ -39,11 +39,20 @@ import org.apache.spark.sql.functions._
   * temp name and published with `Files.createLink` (hard link), which the
   * POSIX rename/link contract makes ATOMIC and EXCLUSIVE — unlike
   * `ATOMIC_MOVE`, which silently REPLACES an existing target on Linux and
-  * would let two writers both "win" version N+1. The loser gets
-  * `FileAlreadyExistsException`, re-reads the new latest snapshot, and
-  * either retries (append — commutes with any concurrent commit) or
-  * aborts (merge — a conflicting rewrite must re-run validation, the
-  * optimistic-concurrency rule real table formats apply).
+  * would let two writers both "win" version N+1. Every write runs its
+  * publish inside ONE commit loop ([[committing]]): each attempt derives
+  * its commit from the snapshot it is handed, and a lost race re-reads
+  * the new latest snapshot and calls the attempt again — where an
+  * append simply rebases (it commutes with any concurrent commit) and a
+  * copy-on-write rewrite first re-runs its conflict checks, aborting
+  * when the race touched what it read (the optimistic-concurrency rule
+  * real table formats apply). After [[TxTable.CommitRetries]] rebases —
+  * or on the first lost race for the metadata-only verbs, which pass
+  * `retries = 0` — the loop gives up with a
+  * `ConcurrentModificationException` naming the operation and the table.
+  * Nothing after the link can fail a commit: the staging-file delete and
+  * the checkpoint are best-effort, so a published version is never
+  * reported as failed (a caller that retried would write it twice).
   *
   * Per-file stats: each committed file carries `rows` plus min/max of the
   * declared `statCols` (computed by ONE distributed pass over the staged
@@ -591,8 +600,9 @@ final class TxTable(val root: String, val statCols: Seq[String],
     val evolvedMeta = s0.meta.flatMap(m => evolveForSource(s0, m.schema, df.schema))
       .orElse(declareFirstWrite(s0, df))
     val entries = writeDataFiles(spark, df)
-    commitWithRetry(maxRetries = 10, op = "append",
-      meta = evolvedMeta) { base => base.files ++ entries }
+    committing("append") { base =>
+      commitOnce(base, base.files ++ entries, op = "append", meta = evolvedMeta)
+    }
   }
 
   /** The first-write schema declaration for a table born without one:
@@ -611,8 +621,10 @@ final class TxTable(val root: String, val statCols: Seq[String],
     * no old rows the previous declaration still describes). */
   def overwrite(spark: SparkSession, df: DataFrame): Int = {
     val entries = writeDataFiles(spark, df)
-    commitWithRetry(maxRetries = 10, op = "overwrite",
-      meta = declareFirstWrite(snapshot(), df)) { _ => entries }
+    val meta = declareFirstWrite(snapshot(), df)
+    committing("overwrite") { base =>
+      commitOnce(base, entries, op = "overwrite", meta = meta)
+    }
   }
 
   /** Overwrite + txn watermark in ONE commit — the materialized-view
@@ -623,17 +635,11 @@ final class TxTable(val root: String, val statCols: Seq[String],
   private[graft] def overwriteTagged(spark: SparkSession, df: DataFrame,
       txns: Map[String, Long]): Int = {
     val entries = writeDataFiles(spark, df)
-    var attempt = 0
-    while (true) {
-      val base = snapshot()
-      try return commitOnce(base, txns, op = "mview-refresh",
-        meta = declareFirstWrite(base, df)) { _ => entries }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException if attempt < 10 =>
-          attempt += 1 // overwrite declares the whole table: rebase, retry
-      }
+    // overwrite declares the whole table: every rebase simply republishes
+    committing("mview-refresh") { base =>
+      commitOnce(base, entries, txns, op = "mview-refresh",
+        meta = declareFirstWrite(base, df))
     }
-    -1 // unreachable
   }
 
   /** Copy-on-write MERGE (upsert): rows of `source` replace same-`key`
@@ -1618,7 +1624,9 @@ final class TxTable(val root: String, val statCols: Seq[String],
         val content = source.read(spark, versionAsOf = Some(srcV))
         if (content.isEmpty) Nil else writeDataFiles(spark, content)
       }
-    commitOnce(base, Map(appId -> srcV.toLong), op = "bootstrap")(_ => entries)
+    committing("bootstrap", retries = 0, from = base) { b =>
+      commitOnce(b, entries, Map(appId -> srcV.toLong), op = "bootstrap")
+    }
     srcV
   }
 
@@ -2078,21 +2086,13 @@ final class TxTable(val root: String, val statCols: Seq[String],
     * (vacuum reclaims the bytes later). Declared metadata, constraints
     * and stream watermarks survive: a truncated table is EMPTY, not
     * destroyed. */
-  def truncateAll(): DeleteResult = {
-    var attempt = 0
-    while (true) {
-      val base = snapshot()
-      try {
-        val v = commitOnce(base, op = "delete") { _ => Nil }
-        return DeleteResult(v, droppedFiles = base.files.size,
-          rewrittenFiles = 0, keptFiles = 0, newFiles = 0)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException if attempt < 10 =>
-          attempt += 1 // truncate commutes with nothing; rebase and retry
-      }
+  def truncateAll(): DeleteResult =
+    // truncate drops whatever the latest snapshot holds: rebase and retry
+    committing("truncate") { base =>
+      DeleteResult(commitOnce(base, Nil, op = "delete"),
+        droppedFiles = base.files.size, rewrittenFiles = 0, keptFiles = 0,
+        newFiles = 0)
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Atomic band overwrite (Delta's `replaceWhere`) — the
     * backfill/restatement path: in ONE commit, rows with `statCol` in
@@ -2126,7 +2126,7 @@ final class TxTable(val root: String, val statCols: Seq[String],
     // replacement row lies outside every band and must be rejected too
     val escapees = replacement.filterNot(_.provablyAllIn(p, lo, hi))
     if (escapees.nonEmpty) {
-      replacement.foreach(e => Files.deleteIfExists(dataDir.resolve(e.path)))
+      reclaim(replacement)
       throw new IllegalArgumentException(
         s"overwriteWhere($statCol in [$lo, $hi]) rejected: replacement rows " +
           s"escape the declared band in ${escapees.size} file(s) " +
@@ -2730,12 +2730,9 @@ final class TxTable(val root: String, val statCols: Seq[String],
       require(bad == 0,
         s"cannot declare CHECK ($predicate): existing data violates it in $bad row(s)")
     }
-    try commitOnce(base, constraints = Some(base.constraints :+ stored),
-      op = "add-constraint") { _ => base.files }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"constraint declaration on $root lost the commit race; re-run")
+    committing("add-constraint", retries = 0, from = base) { b =>
+      commitOnce(b, b.files, constraints = Some(b.constraints :+ stored),
+        op = "add-constraint")
     }
   }
 
@@ -2762,13 +2759,10 @@ final class TxTable(val root: String, val statCols: Seq[String],
     val stored = base.constraints.find(c => canon(c) == target).getOrElse(
       throw new IllegalArgumentException(
         s"no such constraint: $predicate (have ${base.constraints.mkString("; ")})"))
-    try commitOnce(base,
-      constraints = Some(base.constraints.filterNot(_ == stored)),
-      op = "drop-constraint") { _ => base.files }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"constraint drop on $root lost the commit race; re-run")
+    committing("drop-constraint", retries = 0, from = base) { b =>
+      commitOnce(b, b.files,
+        constraints = Some(b.constraints.filterNot(_ == stored)),
+        op = "drop-constraint")
     }
   }
 
@@ -2818,12 +2812,8 @@ final class TxTable(val root: String, val statCols: Seq[String],
     val newMap =
       if (newName == p) base.colMap - oldName // renamed back: identity again
       else (base.colMap - oldName) + (newName -> p)
-    try commitOnce(base, colMap = Some(newMap),
-      op = "rename-column") { _ => base.files }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"rename on $root lost the commit race; re-run")
+    committing("rename-column", retries = 0, from = base) { b =>
+      commitOnce(b, b.files, colMap = Some(newMap), op = "rename-column")
     }
   }
 
@@ -2887,12 +2877,8 @@ final class TxTable(val root: String, val statCols: Seq[String],
       s"cannot drop $name: CHECK constraint(s) reference it " +
         s"(${mentioned.mkString("; ")}) — dropConstraint first")
     val newMap = (base.colMap - name) + (("-" + p) -> p)
-    try commitOnce(base, colMap = Some(newMap),
-      op = "drop-column") { _ => base.files }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"drop on $root lost the commit race; re-run")
+    committing("drop-column", retries = 0, from = base) { b =>
+      commitOnce(b, b.files, colMap = Some(newMap), op = "drop-column")
     }
   }
 
@@ -2903,16 +2889,11 @@ final class TxTable(val root: String, val statCols: Seq[String],
     * only in the creating JVM's handle, so `CREATE TABLE …; INSERT
     * INTO …` from a later session found a table that "carries no
     * declared schema". History records `create`. */
-  def declareMeta(schema: org.apache.spark.sql.types.StructType): Int = {
-    val base = snapshot()
-    try commitOnce(base, op = "create",
-      meta = Some(TableMeta(schema.json, statCols, bloomCols))) { _ => base.files }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"declareMeta on $root lost the commit race; re-run")
+  def declareMeta(schema: org.apache.spark.sql.types.StructType): Int =
+    committing("declareMeta", retries = 0) { b =>
+      commitOnce(b, b.files, op = "create",
+        meta = Some(TableMeta(schema.json, statCols, bloomCols)))
     }
-  }
 
   /** ALTER TABLE ADD COLUMN — metadata-only schema evolution, the most
     * common evolution DDL of all: the new column is DECLARED in the
@@ -2939,12 +2920,9 @@ final class TxTable(val root: String, val statCols: Seq[String],
       s"column name $name is taken by a renamed column's physical name")
     val evolved = org.apache.spark.sql.types.StructType(
       current.fields :+ org.apache.spark.sql.types.StructField(name, dataType))
-    try commitOnce(base, op = s"add-column($name)",
-      meta = Some(TableMeta(evolved.json, statCols, bloomCols))) { _ => base.files }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"add-column on $root lost the commit race; re-run")
+    committing(s"add-column($name)", retries = 0, from = base) { b =>
+      commitOnce(b, b.files, op = s"add-column($name)",
+        meta = Some(TableMeta(evolved.json, statCols, bloomCols)))
     }
   }
 
@@ -2980,12 +2958,9 @@ final class TxTable(val root: String, val statCols: Seq[String],
         "rewrite via a new column + backfill instead)")
     val evolved = org.apache.spark.sql.types.StructType(
       current.fields.updated(idx, current(idx).copy(dataType = dataType)))
-    try commitOnce(base, op = s"alter-column-type($name)",
-      meta = Some(TableMeta(evolved.json, statCols, bloomCols))) { _ => base.files }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"alter-column-type on $root lost the commit race; re-run")
+    committing(s"alter-column-type($name)", retries = 0, from = base) { b =>
+      commitOnce(b, b.files, op = s"alter-column-type($name)",
+        meta = Some(TableMeta(evolved.json, statCols, bloomCols)))
     }
   }
 
@@ -3134,12 +3109,9 @@ final class TxTable(val root: String, val statCols: Seq[String],
         Some(TableMeta(schema.json, widened,
           (bloomCols ++ base.meta.toSeq.flatMap(_.bloomCols)).distinct.sorted))
       }
-    try commitOnce(base, op = if (declare) "analyze" else "evolve-stats",
-      meta = meta) { _ => evolved }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"stats evolution of $root lost the commit race; re-run against the new snapshot")
+    val op = if (declare) "analyze" else "evolve-stats"
+    committing(op, retries = 0, from = base) { b =>
+      commitOnce(b, evolved, op = op, meta = meta)
     }
   }
 
@@ -3182,9 +3154,7 @@ final class TxTable(val root: String, val statCols: Seq[String],
     // unrename path) and the constraint set as of the target. Stream txn
     // watermarks deliberately carry FORWARD (commitOnce merges them):
     // idempotence promises must survive a rewind.
-    var attempt = 0
-    while (true) {
-      val base = snapshot()
+    committing(s"restore($versionAsOf)") { base =>
       val cons =
         if (base.constraints == target.constraints) None
         else Some(target.constraints)
@@ -3209,16 +3179,9 @@ final class TxTable(val root: String, val statCols: Seq[String],
               target.files, target.colMap, None).schema.json,
             statCols, bloomCols))
         }
-      try return commitOnce(base, constraints = cons,
-        colMap = cmap, op = s"restore($versionAsOf)", meta = mt) { _ => target.files }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          if (attempt < 10) attempt += 1 // rebase onto the new latest, retry
-          else throw new java.util.ConcurrentModificationException(
-            s"restore($versionAsOf) on $root lost the commit race; re-run")
-      }
+      commitOnce(base, target.files, constraints = cons, colMap = cmap,
+        op = s"restore($versionAsOf)", meta = mt)
     }
-    -1 // unreachable
   }
 
   /** SHALLOW CLONE (Delta `CREATE TABLE t SHALLOW CLONE src`): a new
@@ -3244,16 +3207,14 @@ final class TxTable(val root: String, val statCols: Seq[String],
     val snap = snapshot()
     require(snap.version >= 1, s"cannot clone empty table $root")
     val dst = new TxTable(dstRoot, statCols, bloomCols)
-    require(dst.currentVersion == 0, s"clone target $dstRoot is not empty")
     val abs = snap.files.map(f => f.copy(
       path = dataDir.resolve(f.path).toAbsolutePath.toString,
       dv = f.dv.map(d => dataDir.resolve(d).toAbsolutePath.toString)))
-    val tmp = dst.logDir.resolve(s".tmp-${UUID.randomUUID()}")
-    Files.write(tmp,
-      renderManifest(abs, Map.empty, snap.constraints, snap.colMap,
-        op = Some(s"clone(${root})"), meta = snap.meta).getBytes("UTF-8"))
-    try Files.createLink(dst.logDir.resolve(manifestName(1)), tmp)
-    finally { Files.deleteIfExists(tmp); () }
+    dst.committing(s"clone($root)", retries = 0) { empty =>
+      require(empty.version == 0, s"clone target $dstRoot is not empty")
+      dst.commitOnce(empty, abs, constraints = Some(snap.constraints),
+        colMap = Some(snap.colMap), op = s"clone($root)", meta = snap.meta)
+    }
     dst
   }
 
@@ -3591,44 +3552,86 @@ final class TxTable(val root: String, val statCols: Seq[String],
         .as(s"__hist_$c")))
 
   /** One commit attempt on top of `base`: stage a DELTA manifest (the
-    * entry-level diff of the new file list against `base` — O(changed
-    * files) to write, never O(table) — plus only the txn watermarks this
-    * commit touches and a constraint replacement if any) and publish it
-    * as v{base+1} via hard link (atomic put-if-absent). Stream
-    * watermarks still survive vacuum: reconstruction merges txn lines
-    * forward and every checkpoint carries the merged map, so the
+    * entry-level diff of `files` — the new file list — against `base`:
+    * O(changed files) to write, never O(table) — plus only the txn
+    * watermarks this commit touches and a constraint replacement if any)
+    * and publish it as v{base+1} via hard link (atomic put-if-absent).
+    * Stream watermarks still survive vacuum: reconstruction merges txn
+    * lines forward and every checkpoint carries the merged map, so the
     * checkpoint+tail a vacuumed table retains answers "what has stream X
     * committed?" exactly as the old full manifests did. Every
     * [[TxTable.CheckpointInterval]]-th version also writes a full-state
     * checkpoint AFTER the commit link — derived acceleration, safe to
-    * lose. Throws FileAlreadyExistsException if someone else committed
-    * base+1 first. */
-  private def commitOnce(base: Snapshot, txns: Map[String, Long] = Map.empty,
+    * lose, so it and the staging-file delete are best-effort: once the
+    * link lands nothing may throw. Throws FileAlreadyExistsException if
+    * someone else committed base+1 first; only [[committing]] calls it. */
+  private def commitOnce(base: Snapshot, files: Seq[FileEntry],
+      txns: Map[String, Long] = Map.empty,
       constraints: Option[Seq[String]] = None,
       colMap: Option[Map[String, String]] = None,
-      op: String = "write", meta: Option[TableMeta] = None)(
-      next: Snapshot => Seq[FileEntry]): Int = {
+      op: String = "write", meta: Option[TableMeta] = None): Int = {
     val v = base.version + 1
-    val newFiles = next(base)
     // Diff by FULL entry equality: stats evolution re-describes a file
     // under the same (path, dv) identity, and the delta must carry that
     // as remove+add or the widened stats would be lost on replay.
     val baseSet = base.files.toSet
-    val newSet = newFiles.toSet
-    val adds = newFiles.filterNot(baseSet.contains)
+    val newSet = files.toSet
+    val adds = files.filterNot(baseSet.contains)
     val removes = base.files.filterNot(newSet.contains).map(f => (f.path, f.dv))
     val tmp = logDir.resolve(s".tmp-${UUID.randomUUID()}")
     Files.write(tmp,
       renderDelta(adds, removes, txns, constraints, clockMs(), colMap, op, meta).getBytes("UTF-8"))
     try {
+      fault("publish")
       Files.createLink(logDir.resolve(manifestName(v)), tmp)
-    } finally Files.deleteIfExists(tmp)
-    if (v % CheckpointInterval == 0)
-      writeCheckpoint(v, newFiles, base.txns ++ txns,
-        constraints.getOrElse(base.constraints),
-        colMap.getOrElse(base.colMap),
-        meta.orElse(base.meta))
+    } catch { case e: Throwable => Files.deleteIfExists(tmp); throw e }
+    def afterLink(step: String)(body: => Unit): Unit =
+      try body catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[txtable] $root v$v is committed; $step failed: $e")
+      }
+    afterLink("staging-file delete") { Files.deleteIfExists(tmp); () }
+    afterLink("checkpoint") {
+      fault("linked")
+      if (v % CheckpointInterval == 0)
+        writeCheckpoint(v, files, base.txns ++ txns,
+          constraints.getOrElse(base.constraints),
+          colMap.getOrElse(base.colMap),
+          meta.orElse(base.meta))
+    }
     v
+  }
+
+  /** Test seam: called with the commit step about to run — `"publish"`
+    * just before the manifest link, `"linked"` just after it. Specs use
+    * it to race a second writer into the gap or fail a post-link step;
+    * production never touches it. */
+  private[graft] var fault: String => Unit = _ => ()
+
+  /** THE commit loop every write publishes through. `attempt` is handed
+    * a snapshot — `from` first, then the latest one after each lost
+    * race — and derives its commit from it (or refuses by throwing, or
+    * returns early without publishing), publishing with [[commitOnce]].
+    * When the publish race is lost the loop re-reads the latest snapshot
+    * and calls `attempt` again; after `retries` rebases it throws one
+    * ConcurrentModificationException naming `what` and the table. */
+  private def committing[A](what: String, retries: Int = CommitRetries,
+      from: Snapshot = snapshot())(attempt: Snapshot => A): A = {
+    var base = from
+    var rebases = 0
+    var result: Option[A] = None
+    while (result.isEmpty) {
+      try result = Some(attempt(base))
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException =>
+          if (rebases == retries)
+            throw new java.util.ConcurrentModificationException(
+              s"$what on $root lost the commit race ${rebases + 1} time(s); re-run")
+          rebases += 1
+          base = snapshot()
+      }
+    }
+    result.get
   }
 
   /** Write the full state of `v` as a checkpoint — idempotent and
@@ -3653,41 +3656,16 @@ final class TxTable(val root: String, val statCols: Seq[String],
     * version still moves (ADVICE r14: without it the same change range
     * is re-read forever). Never conflicts: it reads nothing. */
   private[graft] def commitTxns(txns: Map[String, Long],
-      op: String = "txn"): Int = {
-    var attempt = 0
-    while (true) {
-      val base = snapshot()
-      try return commitOnce(base, txns, op = op)(_ => base.files)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException if attempt < 10 =>
-          attempt += 1
-      }
-    }
-    -1 // unreachable
-  }
-
-  private def commitWithRetry(maxRetries: Int, op: String = "write",
-      meta: Option[TableMeta] = None)(
-      next: Snapshot => Seq[FileEntry]): Int = {
-    var attempt = 0
-    while (true) {
-      val base = snapshot()
-      try return commitOnce(base, op = op, meta = meta)(next)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException if attempt < maxRetries =>
-          attempt += 1 // rebase onto the new latest and try again
-      }
-    }
-    -1 // unreachable
-  }
+      op: String = "txn"): Int =
+    committing(op) { base => commitOnce(base, base.files, txns, op = op) }
 
   /** Publish a copy-on-write commit — `candidates` leave the manifest,
     * `entries` join it — REBASING across concurrent commits when
     * file-level conflict detection proves them disjoint, instead of the
     * abort-on-any-race a serial log would force (the Delta/Iceberg
     * optimistic-concurrency shape: conflict on what was READ, not on
-    * the version counter). A lost race re-reads the latest snapshot and
-    * aborts only if
+    * the version counter). The first attempt publishes on `base`; each
+    * rebase the commit loop hands it aborts only if
     *
     *  - a candidate's (path, dv) identity is gone — a concurrent
     *    rewrite/delete/DV touched a file this operation read, so its
@@ -3716,49 +3694,46 @@ final class TxTable(val root: String, val statCols: Seq[String],
       txns: Map[String, Long] = Map.empty,
       meta: Option[TableMeta] = None): Int = {
     val candIds = candidates.map(f => (f.path, f.dv)).toSet
-    val baseIds = base.files.map(f => (f.path, f.dv)).toSet
-    var attempt = base
-    var rebases = 0
-    while (true) {
-      val kept = attempt.files.filterNot(f => candIds.contains((f.path, f.dv)))
-      try return commitOnce(attempt, txns, op = what,
-        meta = meta) { _ => kept ++ entries }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          rebases += 1
-          val cur = snapshot()
-          def conflict(why: String): Nothing =
-            throw new java.util.ConcurrentModificationException(
-              s"$what on $root conflicts with concurrent version ${cur.version}: " +
-                s"$why; re-run against the new snapshot")
-          if (rebases > 10) conflict("lost the publish race 10 times")
-          if (cur.constraints != base.constraints)
-            conflict("the constraint set changed (staged files were not " +
-              "validated against it)")
-          // an evolved declaration was derived from base's meta; a
-          // concurrent metadata-only change (addColumn, rename) adds no
-          // files, so the fresh-file guard can't see it — re-committing
-          // the stale evolution would silently clobber it (ADVICE r13)
-          if (meta.isDefined && cur.meta != base.meta)
-            conflict("the declared schema changed concurrently (this " +
-              "operation's schema evolution was derived from the old " +
-              "declaration)")
-          val curIds = cur.files.map(f => (f.path, f.dv)).toSet
-          if (!candIds.subsetOf(curIds))
-            conflict("file(s) this operation read were rewritten, deleted, " +
-              "or position-deleted")
-          val fresh = cur.files.filterNot(f => baseIds.contains((f.path, f.dv)))
-          guard.foreach { case (test, desc) =>
-            // missing stats conservatively overlap: nothing proves the
-            // fresh file's rows outside the operation's governed range
-            if (fresh.exists(test))
-              conflict(s"concurrently added file(s) $desc")
-          }
-          attempt = cur
+    lazy val baseIds = base.files.map(f => (f.path, f.dv)).toSet
+    committing(what, from = base) { cur =>
+      if (cur ne base) {
+        def conflict(why: String): Nothing =
+          throw new java.util.ConcurrentModificationException(
+            s"$what on $root conflicts with concurrent version ${cur.version}: " +
+              s"$why; re-run against the new snapshot")
+        if (cur.constraints != base.constraints)
+          conflict("the constraint set changed (staged files were not " +
+            "validated against it)")
+        // an evolved declaration was derived from base's meta; a
+        // concurrent metadata-only change (addColumn, rename) adds no
+        // files, so the fresh-file guard can't see it — re-committing
+        // the stale evolution would silently clobber it (ADVICE r13)
+        if (meta.isDefined && cur.meta != base.meta)
+          conflict("the declared schema changed concurrently (this " +
+            "operation's schema evolution was derived from the old " +
+            "declaration)")
+        val curIds = cur.files.map(f => (f.path, f.dv)).toSet
+        if (!candIds.subsetOf(curIds))
+          conflict("file(s) this operation read were rewritten, deleted, " +
+            "or position-deleted")
+        val fresh = cur.files.filterNot(f => baseIds.contains((f.path, f.dv)))
+        guard.foreach { case (test, desc) =>
+          // missing stats conservatively overlap: nothing proves the
+          // fresh file's rows outside the operation's governed range
+          if (fresh.exists(test))
+            conflict(s"concurrently added file(s) $desc")
+        }
       }
+      val kept = cur.files.filterNot(f => candIds.contains((f.path, f.dv)))
+      commitOnce(cur, kept ++ entries, txns, op = what, meta = meta)
     }
-    -1 // unreachable
   }
+
+  /** Delete staged data files that never became visible: the exits
+    * before a commit link of the writers that promise to leave no
+    * orphans behind. */
+  private def reclaim(entries: Seq[FileEntry]): Unit =
+    entries.foreach(e => Files.deleteIfExists(dataDir.resolve(e.path)))
 
   // ------------------------------------------------------- streaming ingest
 
@@ -3781,42 +3756,30 @@ final class TxTable(val root: String, val statCols: Seq[String],
     // Computed BEFORE staging so a type conflict refuses without writing.
     s0.meta.foreach(m => evolveForSource(s0, m.schema, df.schema))
     val entries = writeDataFiles(spark, df)
-    // any non-retryable exit below (a type-conflicting concurrent schema
-    // change surfacing in the re-derived evolution, or the publish race
-    // lost 10 times) must reclaim the staged parquets before propagating
-    // — mirroring the duplicate-batch cleanup, else they leak as orphans
-    // (ADVICE r14)
-    try {
-      var attempt = 0
-      while (true) {
-        val base = snapshot()
-        if (base.txns.get(appId).exists(_ >= batchId)) {
-          // a concurrent worker landed this very batch between our staging
-          // and commit: discard our staged files, nothing to do
-          entries.foreach(e => Files.deleteIfExists(dataDir.resolve(e.path)))
-          return false
+    // every exit before the link — a concurrent worker landing this very
+    // batch, a type-conflicting concurrent schema change surfacing in the
+    // re-derived evolution, the publish race lost too often — reclaims
+    // the staged parquets, else they leak as orphans (ADVICE r14). Once
+    // the link lands nothing throws: those files are the committed batch.
+    val landed =
+      try committing("stream-append") { base =>
+        if (base.txns.get(appId).exists(_ >= batchId)) false
+        else {
+          // the evolution is RE-DERIVED against each attempt's snapshot: a
+          // concurrent metadata-only change (addColumn) adds no files, so a
+          // stale evolved meta would silently clobber it (ADVICE r13)
+          val evolvedMeta = base.meta.flatMap(m =>
+            evolveForSource(base, m.schema, df.schema))
+            .orElse(declareFirstWrite(base, df))
+          commitOnce(base, base.files ++ entries, Map(appId -> batchId),
+            op = "stream-append", meta = evolvedMeta)
+          true
         }
-        // the evolution is RE-DERIVED against each attempt's snapshot: a
-        // concurrent metadata-only change (addColumn) adds no files, so a
-        // stale evolved meta would silently clobber it (ADVICE r13)
-        val evolvedMeta = base.meta.flatMap(m =>
-          evolveForSource(base, m.schema, df.schema))
-          .orElse(declareFirstWrite(base, df))
-        try {
-          commitOnce(base, Map(appId -> batchId),
-            op = "stream-append", meta = evolvedMeta) { _ => base.files ++ entries }
-          return true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException if attempt < 10 =>
-            attempt += 1 // rebase and re-check the txn watermark
-        }
+      } catch {
+        case scala.util.control.NonFatal(e) => reclaim(entries); throw e
       }
-      false // unreachable
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        entries.foreach(en => Files.deleteIfExists(dataDir.resolve(en.path)))
-        throw e
-    }
+    if (!landed) reclaim(entries)
+    landed
   }
 
   /** COPY INTO — idempotent BULK FILE LOAD (the Delta statement): load
@@ -3859,26 +3822,17 @@ final class TxTable(val root: String, val statCols: Seq[String],
       spark.read.option("mergeSchema", "true")
         .parquet(fresh.map(_.toString): _*))
     val txns = fresh.map(p => s"copy:${src.relativize(p)}" -> 1L).toMap
-    var attempt = 0
-    while (true) {
-      val base = snapshot()
-      if (freshOf(base).toSet != fresh.toSet) {
-        // a concurrent COPY landed part of our file set between staging
-        // and commit: discard the staged data (loading it again would
-        // duplicate rows) and let the caller re-run for the remainder
-        entries.foreach(e => Files.deleteIfExists(dataDir.resolve(e.path)))
+    // every exit before the link reclaims the staged data: loading it
+    // again would duplicate rows, and the caller re-runs for the remainder
+    try committing("copy-into") { base =>
+      if (freshOf(base).toSet != fresh.toSet)
         throw new java.util.ConcurrentModificationException(
           s"COPY INTO $root raced a concurrent COPY of overlapping files; re-run")
-      }
-      try {
-        commitOnce(base, txns, op = "copy-into") { _ => base.files ++ entries }
-        return (fresh.size, entries.map(_.rows).sum)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException if attempt < 10 =>
-          attempt += 1 // rebase (disjoint concurrent commit) and re-check
-      }
+      commitOnce(base, base.files ++ entries, txns, op = "copy-into")
+    } catch {
+      case scala.util.control.NonFatal(e) => reclaim(entries); throw e
     }
-    (0, 0L) // unreachable
+    (fresh.size, entries.map(_.rows).sum)
   }
 }
 
@@ -4028,12 +3982,9 @@ object TxTable {
     require(missing.isEmpty,
       s"stat column(s) ${missing.mkString(", ")} not in the converted " +
         s"schema (${schema.fieldNames.mkString(", ")})")
-    try t.commitOnce(t.snapshot(), op = "convert",
-      meta = Some(TableMeta(schema.json, statCols, bloomCols))) { _ => entries }
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"convert of $dst lost the commit race to a concurrent creator")
+    t.committing("convert", retries = 0) { base =>
+      t.commitOnce(base, entries, op = "convert",
+        meta = Some(TableMeta(schema.json, statCols, bloomCols)))
     }
     t
   }
@@ -4224,6 +4175,11 @@ object TxTable {
     * handful of tiny file reads, large enough that steady-state commit
     * cost is the delta write, not the checkpoint. */
   private[tables] val CheckpointInterval = 10
+
+  /** Rebases a write makes after lost publish races before it gives up
+    * with a ConcurrentModificationException (so at most this + 1
+    * attempts); the metadata-only verbs pass 0 and abort on the first. */
+  private[tables] val CommitRetries = 10
 
   /** Vectored-row fraction above which maintenance folds a file plain
     * (the Delta `maxDeletedRowRatio` shape): past ~50% dead rows the

@@ -7,22 +7,23 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamOps
 
-/** RocksDB CHANGELOG CHECKPOINTING under transformWithState (SURVEY
-  * §2.17 forward note): by default every micro-batch uploads a full
-  * RocksDB snapshot of each partition's state to the checkpoint — at
-  * production key counts that upload, not the work, bounds micro-batch
-  * latency. With `rocksdb.changelogCheckpointing.enabled` the per-batch
-  * durable artifact is the batch's CHANGELOG (the delta), with full
-  * snapshots amortized in the background — the Delta/Flink incremental-
-  * checkpoint shape. This spec pins that the mode is really engaged
-  * (changelog files in the state checkpoint, not just a conf flag),
-  * that a killed-and-restarted query RECOVERS state through changelog
-  * replay (the recovery path is materially different from snapshot
-  * restore), and that the answer stays bit-equal to the oracle-checked
-  * batch twin. */
+/** RocksDB CHANGELOG CHECKPOINTING under the stateful counter→rate
+  * operator (SURVEY §2.17 forward note): by default every micro-batch
+  * uploads a full RocksDB snapshot of each partition's state to the
+  * checkpoint — at production key counts that upload, not the work,
+  * bounds micro-batch latency. With
+  * `rocksdb.changelogCheckpointing.enabled` the per-batch durable
+  * artifact is the batch's CHANGELOG (the delta), with full snapshots
+  * amortized in the background — the Delta/Flink incremental-checkpoint
+  * shape. This spec pins that the mode is really engaged (changelog files
+  * in the state checkpoint, not just a conf flag), that a
+  * killed-and-restarted query RECOVERS state through changelog replay
+  * (the recovery path is materially different from snapshot restore),
+  * and that the answer stays bit-equal to the oracle-checked batch twin.
+  * (`FlapProcessor`'s specs keep the transformWithState API covered.) */
 class ChangelogCheckpointSpec extends AnyFunSuite with SparkFixture {
 
-  test("transformWithState restart under changelog checkpointing: state replayed, result == batch twin") {
+  test("counterToRate restart under changelog checkpointing == batch twin") {
     val base = java.nio.file.Files.createTempDirectory("graft_chlog").toString
     val src = s"$base/src"; val ckpt = s"$base/ckpt"; val out = s"$base/out"
     val sch = StructType(Seq(
@@ -51,7 +52,7 @@ class ChangelogCheckpointSpec extends AnyFunSuite with SparkFixture {
     spark.conf.set(changelog, "true")
     try {
       def run(): Unit = {
-        val q = StreamOps.counterToRateTws(
+        val q = StreamOps.counterToRate(
             spark.readStream.schema(sch).parquet(src))
           .toDF()
           .writeStream.format("parquet")

@@ -62,6 +62,12 @@ class GraftExtensionsSpec extends AnyFunSuite with SparkFixture {
           |  (SELECT bloom_filter_agg(xxhash64(id), CAST(8 AS BIGINT), CAST(128 AS BIGINT))
           |   FROM range(8)), xxhash64(3L))""".stripMargin)
         .head.getBoolean(0))
+      // the harness path registers the very same names
+      Tables.ensure(spark)
+      val names = graft.functions.GraftExtensions.functions.map(_._1)
+      val missing = names.filterNot(n => s.sessionState.functionRegistry.functionExists(n) &&
+        spark.sessionState.functionRegistry.functionExists(n))
+      assert(missing.isEmpty, s"not resolvable in both sessions: $missing")
     }
   }
 

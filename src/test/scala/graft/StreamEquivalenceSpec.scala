@@ -35,26 +35,6 @@ class StreamEquivalenceSpec extends AnyFunSuite with SparkFixture {
     assert(streamed.count() > 0)
   }
 
-  test("transformWithState counter->rate == batch q_win_lag (production state API)") {
-    // transformWithState is RocksDB-only; scope the provider to this query
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val streamed = runToMemory(
-        StreamOps.counterToRateTws(StreamOps.eventsStream(spark, sf)).toDF(), "append")
-        .select("user_id", "event_id", "delta", "dt_us")
-      val batch = SparkEntry.queries("q_win_lag")(spark, sf)
-        .filter(col("delta").isNotNull)
-        .select("user_id", "event_id", "delta", "dt_us")
-      assert(sorted(streamed) == sorted(batch))
-      assert(streamed.count() > 0)
-    } finally {
-      old match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-    }
-  }
-
   test("ValueState flap counter == batch transition counts; state survives batches") {
     import spark.implicits._
     val key = "spark.sql.streaming.stateStore.providerClass"
